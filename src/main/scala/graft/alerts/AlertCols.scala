@@ -2,6 +2,8 @@ package graft.alerts
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.WithColumns
+import org.apache.spark.sql.types.{ArrayType, StructType}
 
 /** Core alert-table column conventions (SURVEY.md §1).
   *
@@ -30,15 +32,24 @@ object AlertCols {
   /** cX = history.X ++ [current.X]; null history treated as empty. */
   def concatCol(df: DataFrame, column: String, prefix: String = "c",
       current: String = ZtfCurrent, history: String = ZtfHistory): DataFrame =
-    df.withColumn(prefix + column,
-      concat(
-        coalesce(col(s"$history.$column"), array().cast(df.select(col(s"$history.$column")).schema.head.dataType)),
-        array(col(s"$current.$column"))))
+    withHistory(df, Seq(column), prefix, current, history)
 
-  /** Apply concatCol over several fields at once. */
+  /** concatCol over several fields, in one projection. The empty-history
+    * element types come from `df.schema` (the type `history.X` extracts
+    * to), read once for all fields.
+    */
   def withHistory(df: DataFrame, columns: Seq[String], prefix: String = "c",
-      current: String = ZtfCurrent, history: String = ZtfHistory): DataFrame =
-    columns.foldLeft(df)((d, c) => concatCol(d, c, prefix, current, history))
+      current: String = ZtfCurrent, history: String = ZtfHistory): DataFrame = {
+    val hist = df.schema(history).dataType.asInstanceOf[ArrayType]
+    val entry = hist.elementType.asInstanceOf[StructType]
+    WithColumns(df, columns.map { c =>
+      val f = entry(c)
+      val extracted = ArrayType(f.dataType, hist.containsNull || f.nullable)
+      prefix + c -> concat(
+        coalesce(col(s"$history.$c"), array().cast(extracted)),
+        array(col(s"$current.$c")))
+    })
+  }
 
   /** Count of real detections in a measurement array: entries that are
     * neither null (absent) nor NaN (upper limit). Matches the reference's

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.WithColumns
 
 import graft.kernels.{FastTransientKernel, LightCurveFeatures, SigmoidFit}
 import graft.models.{AnomalyModels, RefModels, Scorer, StubModels}
@@ -52,13 +53,13 @@ object Classifiers {
     val s = udf((cjd: Seq[java.lang.Double], cm: Seq[java.lang.Double],
         cs: Seq[java.lang.Double], cf: Seq[Int]) =>
       scorer.score(sniaFeatures(arr(cjd), arr(cm), arr(cs), cf.toArray)))
-    df.withColumn("pIa",
-        when(SelectionCuts.sniaGate(col("cmagpsf"), col("candidate.ndethist"),
+    WithColumns(df, Seq(
+      "pIa" -> when(SelectionCuts.sniaGate(col("cmagpsf"), col("candidate.ndethist"),
           col("cdsxmatch")),
           s(col("cjd").cast("array<double>"), col("cmagpsf").cast("array<double>"),
             col("csigmapsf").cast("array<double>"), col("cfid").cast("array<int>")))
-          .otherwise(lit(0.0)))
-      .withColumn("pIa_is_stub", lit(graft.models.Scorer.isStandIn(scorer)))
+          .otherwise(lit(0.0)),
+      "pIa_is_stub" -> lit(graft.models.Scorer.isStandIn(scorer))))
   }
 
   /** Kilonova score (`pKNe`) — reference: ztf/kilonova/processor.py:37-186
@@ -147,13 +148,13 @@ object Classifiers {
       }
       scorer(feats)
     })
-    df.withColumn("pKNe",
-        when(SelectionCuts.kilonovaGate(col("cmagpsf"), col("candidate.ndethist"),
+    WithColumns(df, Seq(
+      "pKNe" -> when(SelectionCuts.kilonovaGate(col("cmagpsf"), col("candidate.ndethist"),
           col("cdsxmatch")),
           s(col("cjd").cast("array<double>"), col("cmagpsf").cast("array<double>"),
             col("csigmapsf").cast("array<double>"), col("cfid").cast("array<int>")))
-          .otherwise(lit(0.0)))
-      .withColumn("pKNe_is_stub", lit(pipeline.isEmpty))
+          .otherwise(lit(0.0)),
+      "pKNe_is_stub" -> lit(pipeline.isEmpty)))
   }
 
   /** Microlensing score (`mulens`) — reference:
@@ -238,17 +239,17 @@ object Classifiers {
         else 0.0
       }
     })
-    df.withColumn("mulens",
-        when(col("candidate.ndethist").cast("int") < 100,
+    WithColumns(df, Seq(
+      "mulens" -> when(col("candidate.ndethist").cast("int") < 100,
           s(col("cmagpsf").cast("array<double>"),
             col("csigmapsf").cast("array<double>"),
             col("cmagnr").cast("array<double>"),
             col("csigmagnr").cast("array<double>"),
             col("cisdiffpos").cast("array<string>"),
             col("cfid").cast("array<int>")))
-          .otherwise(lit(0.0)))
-      .withColumn("mulens_is_stub", lit(forest.isEmpty))
-      .withColumn("mulens_features_approx", lit(true))
+          .otherwise(lit(0.0)),
+      "mulens_is_stub" -> lit(forest.isEmpty),
+      "mulens_features_approx" -> lit(true)))
   }
 
   /** SNN score — reference: ztf/snn/processor.py:84-210: the selection
@@ -282,13 +283,13 @@ object Classifiers {
             .map(x => if (x.isNaN) 0.0 else x))
         })
     }
-    df.withColumn(outCol,
-        when(SelectionCuts.snnGate(col("cmagpsf"), col("cjd"),
+    WithColumns(df, Seq(
+      outCol -> when(SelectionCuts.snnGate(col("cmagpsf"), col("cjd"),
           col("candidate.jdstarthist"), col("roid"), col("cdsxmatch")),
           s(col("cjd").cast("array<double>"), col("cfid").cast("array<int>"),
             col("cmagpsf").cast("array<double>"), col("csigmapsf").cast("array<double>")))
-          .otherwise(lit(0.0)))
-      .withColumn(outCol + "_is_stub", lit(model.isEmpty))
+          .otherwise(lit(0.0)),
+      outCol + "_is_stub" -> lit(model.isEmpty)))
   }
 
   /** Anomaly score — reference: ztf/anomaly_detection/processor.py:85-242.
@@ -331,11 +332,19 @@ object Classifiers {
 }
 
 /** Deterministic stand-in PCA components for the kilonova projection
-  * (real deployment: the kndetect component matrix, broadcast).
+  * (real deployment: the kndetect component matrix, mixed_pcs.csv).
+  * Same layout as the real matrix — 3 components on the 401-sample grid
+  * of 0.25 d steps over +-50 d around peak that
+  * [[Classifiers.kilonova]] interpolates on: a peak, its asymmetry and
+  * a damped oscillation.
   */
 object StubComponents {
-  val pc: Array[Array[Double]] = {
-    val r = new java.util.Random(424242L)
-    Array.fill(3)(Array.fill(24)(r.nextGaussian() / math.sqrt(24.0)))
+  val pc: Array[Array[Double]] = Array.tabulate(3, 401) { (k, i) =>
+    val dt = (i - 200) * 0.25
+    k match {
+      case 0 => math.exp(-dt * dt / 200.0)
+      case 1 => dt / 50.0 * math.exp(-dt * dt / 400.0)
+      case _ => math.cos(dt / 8.0) * math.exp(-math.abs(dt) / 25.0)
+    }
   }
 }

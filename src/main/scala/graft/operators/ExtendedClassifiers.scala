@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.WithColumns
 
 import graft.kernels.{FastTransientKernel, LightCurveFeatures, OrphanFeatures, SigmoidFit}
 import graft.models.{RefModels, Scorer, StubModels}
@@ -136,8 +137,8 @@ object ExtendedClassifiers {
       }
     })
     val age = element_at(col("cjd"), -1) - col("candidate.jdstarthist")
-    df.withColumn("superluminous_score",
-        when(isTransient && age >= minAgeDays,
+    WithColumns(df, Seq(
+      "superluminous_score" -> when(isTransient && age >= minAgeDays,
           s(col("objectId"), col("cjd").cast("array<double>"),
             col("cfid").cast("array<int>"),
             col("cmagpsf").cast("array<double>"),
@@ -145,8 +146,8 @@ object ExtendedClassifiers {
             col("candidate.distnr").cast("double"),
             col("candidate.ra").cast("double"),
             col("candidate.dec").cast("double")))
-          .otherwise(lit(-1.0)))
-      .withColumn("superluminous_score_is_stub", lit(model.isEmpty))
+          .otherwise(lit(-1.0)),
+      "superluminous_score_is_stub" -> lit(model.isEmpty)))
   }
 
   /** Orphan-GRB afterglow score (Rubin) — reference:

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.WithColumns
+
 
 /** External Data-Release light-curve source (the reference queries the
   * SNAD ZTF-DR API over HTTP, blazar_extreme_state/utils.py:253-319).
@@ -129,14 +131,14 @@ object ExtremeState {
       "cdf_quantile" -> cdf.toFloat)
   }
 
-  /** Appends `blazar_stats`; expects cstd_flux/cjd/cra/cdec series plus
-    * catalog thresholds joined by [[withThresholds]].
+  /** Appends `blazar_stats`; expects cstd_flux/cjd/cra/cdec series
+    * ([[StandardizedFlux]]). The thresholds come from the CTAO catalog
+    * through the lookup StandardizedFlux uses: `cache()` the catalog to
+    * build it once; an uncached catalog is re-read on every call.
     */
   def apply(spark: SparkSession, df: DataFrame, catalog: DataFrame,
       client: DrLightCurveClient = NoDrLightCurve): DataFrame = {
-    val cat = broadcast(catalog.select(col("ZTF_name").as("__name"),
-      col("low_threshold").as("__lo"), col("high_threshold").as("__hi")))
-    val joined = df.join(cat, df("objectId") === col("__name"), "left")
+    val blazar = StandardizedFlux.blazarLookup(catalog)
 
     val kernel = udf((matched: Boolean, lo: java.lang.Double, hi: java.lang.Double,
         cjd: Seq[java.lang.Double], cstd: Seq[java.lang.Double],
@@ -153,10 +155,9 @@ object ExtremeState {
         arr(cjd), arr(cstd), meanOf(cra), meanOf(cdec), client)
     })
 
-    joined.withColumn("blazar_stats", kernel(
-      col("__name").isNotNull, col("__lo"), col("__hi"),
+    WithColumns(df, Seq("blazar_stats" -> kernel(
+      blazar.isNotNull, blazar.getField("lo"), blazar.getField("hi"),
       col("cjd").cast("array<double>"), col("cstd_flux").cast("array<double>"),
-      col("cra").cast("array<double>"), col("cdec").cast("array<double>")))
-      .drop("__name", "__lo", "__hi")
+      col("cra").cast("array<double>"), col("cdec").cast("array<double>"))))
   }
 }

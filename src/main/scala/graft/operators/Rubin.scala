@@ -308,12 +308,9 @@ object Rubin {
         col("fullname").cast("string").as("fullname"),
         col("type").cast("string").as("type"),
         col("redshift").cast("float").as("redshift")).as("tns"))
-    graft.xmatch.CrossMatch.closestWithin(
-      alerts.withColumn("__ra", col(raCol)).withColumn("__dec", col(decCol)),
-      cat, radiusArcsec, idCol, "__ra", "__dec", "__tra", "__tdec",
-      Seq("tns"),
+    graft.xmatch.CrossMatch.closestWithin(alerts, cat, radiusArcsec, idCol,
+      raCol, decCol, "__tra", "__tdec", Seq("tns"),
       Map("tns" -> lit(null).cast("struct<fullname:string,type:string,redshift:float>")))
-      .drop("__ra", "__dec")
   }
 
   /** Declination-band catalog pre-filter used by the Rubin xmatch

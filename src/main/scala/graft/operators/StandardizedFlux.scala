@@ -2,12 +2,22 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.WithColumns
+
+import graft.xmatch.CrossMatch
 
 /** Standardized (DC-flux over catalog band-median) flux series for
   * monitored blazars — reference: ztf/standardized_flux/processor.py:31-179
   * + utils.py:7-58 (a pandas UDF re-reading the CTAO catalog per batch;
-  * here a broadcast join + pure Catalyst array transforms, fully
-  * codegen'd, catalog read once).
+  * here a broadcast by-`ZTF_name` lookup + pure Catalyst array
+  * transforms, in one projection over the alerts).
+  *
+  * The catalog lookup ([[blazarLookup]], shared with [[ExtremeState]])
+  * is collected and broadcast under the crossmatch byte budget. Call
+  * `cache()` on the catalog to build it once for every micro-batch: a
+  * cached catalog's lookup is reused while the cache is held, while a
+  * file-backed (uncached) catalog is re-read on every call. A
+  * `ZTF_name` repeated in the catalog raises IllegalArgumentException.
   *
   * Appends `cstd_flux` and `csigma_std_flux` array columns: per-epoch DC
   * flux (Jansky) divided by the catalog's per-band median; epochs with
@@ -19,16 +29,23 @@ object StandardizedFlux {
   private def fluxJy(mag: Column): Column =
     pow(lit(10.0), lit(-0.4) * mag) * 3631.0
 
+  /** Per-alert row of the CTAO catalog by `objectId` = `ZTF_name`
+    * (struct of med1, med2, lo, hi; null when the object is not
+    * monitored). Both blazar modules project the catalog identically, so
+    * a cached catalog yields one shared lookup.
+    */
+  private[operators] def blazarLookup(catalog: DataFrame): Column =
+    CrossMatch.lookupByKey(col("objectId"), catalog, "ZTF_name", Seq(
+      col("medians").getField("1").as("med1"),
+      col("medians").getField("2").as("med2"),
+      col("low_threshold").as("lo"),
+      col("high_threshold").as("hi")))
+
   /** @param catalog CTAO blazar table with ZTF_name,
     *                medians: struct<1:double,2:double>, *_threshold
     */
   def apply(df: DataFrame, catalog: DataFrame): DataFrame = {
-    val cat = broadcast(catalog.select(
-      col("ZTF_name"),
-      col("medians").getField("1").as("__med1"),
-      col("medians").getField("2").as("__med2")))
-
-    val joined = df.join(cat, df("objectId") === cat("ZTF_name"), "left")
+    val blazar = blazarLookup(catalog)
 
     // per-epoch zipped computation over the history arrays
     val zipped = arrays_zip(
@@ -40,7 +57,7 @@ object StandardizedFlux {
       col("cfid").cast("array<int>").as("fid"))
 
     def median(fid: Column): Column =
-      when(fid === 1, col("__med1")).when(fid === 2, col("__med2"))
+      when(fid === 1, blazar.getField("med1")).when(fid === 2, blazar.getField("med2"))
 
     def dcFlux(e: Column): Column = {
       val fRef = fluxJy(e.getField("mr"))
@@ -66,11 +83,8 @@ object StandardizedFlux {
       nanIfInvalid(dcSigma(e) / median(e.getField("fid")), e))
 
     val empty = array().cast("array<double>")
-    joined
-      .withColumn("cstd_flux",
-        when(col("ZTF_name").isNull, empty).otherwise(stdFlux))
-      .withColumn("csigma_std_flux",
-        when(col("ZTF_name").isNull, empty).otherwise(stdSigma))
-      .drop("ZTF_name", "__med1", "__med2")
+    WithColumns(df, Seq(
+      "cstd_flux" -> when(blazar.isNull, empty).otherwise(stdFlux),
+      "csigma_std_flux" -> when(blazar.isNull, empty).otherwise(stdSigma)))
   }
 }

@@ -2,6 +2,8 @@ package graft.xmatch
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.WithColumns
+
 
 /** Spatial nearest-neighbor crossmatch on the celestial sphere —
   * reference: ztf/xmatch/utils.py:32-82 (astropy KD-tree inside a pandas
@@ -10,7 +12,7 @@ import org.apache.spark.sql.functions._
   * Spark-first design (SURVEY.md §4 "custom Catalyst work"; plan shape
   * r15, VERDICT r14 #1):
   *
-  * 1. The small catalog is packed ONCE on the driver into a broadcast
+  * 1. The small catalog is packed on the driver into a broadcast
   *    `(dec zone, RA bucket) -> candidate` CSR index
   *    ([[org.apache.spark.sql.graft.CatalogIndex]] — zone height = match
   *    radius, rows replicated into both neighbor zones, per-zone modular
@@ -27,18 +29,21 @@ import org.apache.spark.sql.functions._
   * 3. Left semantics: unmatched alerts keep a default payload
   *    (`Unknown` label convention, processor.py:593-595).
   *
-  * The catalog is collected + broadcast at plan-construction time (one
-  * small job) — the same driver-size contract as the broadcast join it
-  * replaces, now failed fast by a measured BYTES budget (r16: Catalyst
-  * plan-size pre-check with zero jobs, then a running byte meter during
-  * a streamed partition-at-a-time collect) instead of an executor OOM
-  * or the r15 row cap that a wide catalog could pass while still
-  * OOMing. The declination-band catalog pre-filter of the Rubin
-  * variants (rubin/xmatch/processor.py:455-467) falls out of zoning for
-  * free.
+  * The catalog is collected (one small job) and broadcast when a
+  * crossmatch is planned against it, failed fast by a measured BYTES
+  * budget (r16: Catalyst plan-size pre-check with zero jobs, then a
+  * running byte meter during a streamed partition-at-a-time collect).
+  * Call `cache()` on a static catalog to build its index once: while
+  * the cache is held, later calls reuse the broadcast index with no job
+  * ([[org.apache.spark.sql.graft.CatalogReuse]]). A file-backed
+  * (uncached) catalog is re-read and re-indexed on every call. The
+  * declination-band catalog pre-filter of the Rubin variants
+  * (rubin/xmatch/processor.py:455-467) falls out of zoning for free.
   */
 object CrossMatch {
-  import org.apache.spark.sql.graft.{CatalogIndex, ClosestCatalogProbe}
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.graft.{CatalogIndex, CatalogLookup, CatalogReuse,
+    ClosestCatalogProbe}
   import org.apache.spark.sql.types.StructType
 
   /** Session conf key for the catalog byte budget (driver heap the
@@ -80,10 +85,12 @@ object CrossMatch {
 
   /** Append the payload of the closest catalog row within `radiusArcsec`
     * of each alert (defaults where unmatched). One output row per alert
-    * ROW (per-row probe, left semantics).
+    * ROW (per-row probe, left semantics); a payload column the alerts
+    * already carry is replaced in place.
     *
     * @param alerts     large side; must contain `raCol`, `decCol`
-    * @param catalog    small (broadcast-size) side with (ra, dec, payload...)
+    * @param catalog    small (broadcast-size) side with (ra, dec, payload...);
+    *                   `cache()` it to build its index once
     * @param idCol      retained for API parity — the per-row probe needs
     *                   no grouping key
     * @param payload    catalog payload columns to append
@@ -93,41 +100,79 @@ object CrossMatch {
       radiusArcsec: Double, idCol: String, raCol: String, decCol: String,
       catRa: String, catDec: String, payload: Seq[String],
       defaults: Map[String, Column]): DataFrame = {
-    val (index, payloadType) =
-      buildIndex(catalog, radiusArcsec, catRa, catDec, payload)
-    val bc = alerts.sparkSession.sparkContext.broadcast(index)
-    val probe = ClosestCatalogProbe(
-      col(raCol).cast("double"), col(decCol).cast("double"), bc, payloadType)
-    // collision-safe scratch name (review r15: a fixed "__m" silently
-    // replaced an alert column of the same name)
-    val mCol = Iterator.from(0).map(i => s"__m$i")
-      .find(n => !alerts.columns.contains(n)).get
-    val outCols = alerts.columns.map(col) ++
-      payload.map(c => coalesce(col(mCol)(c), defaults(c)).as(c))
-    alerts.withColumn(mCol, probe).select(outCols: _*)
+    val m = probe(col(raCol), col(decCol), catalog, radiusArcsec, catRa, catDec,
+      payload.map(c => col(c).as(c)))
+    WithColumns(alerts,
+      payload.map(c => c -> coalesce(m.getField(c), defaults(c))))
   }
 
-  /** Collect + budget-meter the catalog and build the broadcastable CSR
-    * index — the guts of [[closestWithin]], factored out so the byte
-    * meter's estimate is a TESTED contract (VERDICT r16 "What's wrong"
-    * #3): the returned index carries `meteredBytes` (the meter's
-    * accepted total), which CrossMatchSpec pins within a factor of
-    * `SizeEstimator.estimate` of the built index on wide and narrow
-    * synthetic catalogs.
+  /** The closest-match probe column: the payload struct of the nearest
+    * catalog row within the radius, or null.
+    */
+  private def probe(ra: Column, dec: Column, catalog: DataFrame,
+      radiusArcsec: Double, catRa: String, catDec: String,
+      payload: Seq[Column]): Column = {
+    val catDf = indexFrame(catalog, catRa, catDec, payload)
+    val payloadType = catDf.schema("__p").dataType.asInstanceOf[StructType]
+    val budget = catalogBytes(catalog)
+    val bc = CatalogReuse.broadcast(catDf, ("index", radiusArcsec, payloadType, budget)) {
+      buildIndexFrom(catDf, radiusArcsec, budget)
+    }
+    ClosestCatalogProbe(ra.cast("double"), dec.cast("double"), bc, payloadType)
+  }
+
+  private def indexFrame(catalog: DataFrame, catRa: String, catDec: String,
+      payload: Seq[Column]): DataFrame =
+    // catalyst rows (cra double, cdec double, payload struct) — payload
+    // values stay in catalyst form so the probe can return them directly
+    catalog.select(
+      col(catRa).cast("double").as("__cra"),
+      col(catDec).cast("double").as("__cdec"),
+      struct(payload: _*).as("__p"))
+
+  private def catalogBytes(catalog: DataFrame): Long =
+    catalog.sparkSession.conf.get(CatalogBytesConf, "") match {
+      case "" => defaultCatalogBytes
+      case v => v.toLong
+    }
+
+  /** Collect + budget-meter the catalog and build the CSR index — the
+    * guts of [[closestWithin]], exposed so the byte meter's estimate is
+    * a TESTED contract (VERDICT r16 "What's wrong" #3): the returned
+    * index carries `meteredBytes` (the meter's accepted total), which
+    * CrossMatchSpec pins within a factor of `SizeEstimator.estimate` of
+    * the built index on wide and narrow synthetic catalogs.
     */
   private[graft] def buildIndex(catalog: DataFrame, radiusArcsec: Double,
       catRa: String, catDec: String, payload: Seq[String])
       : (CatalogIndex, StructType) = {
-    val zh = math.max(radiusArcsec / 3600.0, 1e-4)
-    // collect the catalog as catalyst rows: (cra double, cdec double,
-    // payload struct) — payload values stay in catalyst form so the
-    // probe can return them directly
-    val catDf = catalog.select(
-      col(catRa).cast("double").as("__cra"),
-      col(catDec).cast("double").as("__cdec"),
-      struct(payload.map(c => col(c).as(c)): _*).as("__p"))
-    val payloadType = catDf.schema("__p").dataType.asInstanceOf[StructType]
-    val nP = payloadType.fields.length
+    val catDf = indexFrame(catalog, catRa, catDec, payload.map(c => col(c).as(c)))
+    (buildIndexFrom(catDf, radiusArcsec, catalogBytes(catalog)),
+      catDf.schema("__p").dataType.asInstanceOf[StructType])
+  }
+
+  private def buildIndexFrom(catDf: DataFrame, radiusArcsec: Double,
+      budget: Long): CatalogIndex = {
+    // null/NaN catalog coordinates can never match (the old zone join
+    // dropped them via a null key) — skip them at build
+    val (rows, measured) = collectMetered(catDf, budget, 2, r =>
+      !(r.isNullAt(0) || r.isNullAt(1) || r.getDouble(0).isNaN || r.getDouble(1).isNaN))
+    val nP = catDf.schema(2).dataType.asInstanceOf[StructType].length
+    val index = CatalogIndex.build(math.max(radiusArcsec / 3600.0, 1e-4),
+      radiusArcsec, rows.map(_.getDouble(0)), rows.map(_.getDouble(1)),
+      rows.map(_.getStruct(2, nP).copy()))
+    index.meteredBytes = measured
+    index
+  }
+
+  /** Collect the catalog rows that `usable` accepts, metering their
+    * bytes against `budget`; returns the rows and the metered total.
+    * A row costs [[PerRowOverheadBytes]] plus its payload struct
+    * (ordinal `payloadOrdinal`); skipped rows cost nothing.
+    */
+  private def collectMetered(catDf: DataFrame, budget: Long,
+      payloadOrdinal: Int, usable: InternalRow => Boolean)
+      : (Array[InternalRow], Long) = {
     // BYTES-budget guard (r16, VERDICT r15 "What's wrong" #1): the r15
     // row cap could pass a catalog that still OOMed the driver. Two
     // tiers, both measured:
@@ -153,9 +198,7 @@ object CrossMatch {
     //    driver-side running total remains the authoritative
     //    cross-partition gate and sees the rows that actually arrive
     //    (no count()-then-collect race, no double computation).
-    val spark0 = catalog.sparkSession
-    val budget = spark0.conf.getOption(CatalogBytesConf)
-      .map(_.toLong).getOrElse(defaultCatalogBytes)
+    val spark0 = catDf.sparkSession
     val statsDefault = BigInt(spark0.conf
       .get("spark.sql.defaultSizeInBytes", Long.MaxValue.toString))
     // stats-less leaves report EXACTLY defaultSizeInBytes — identify
@@ -172,17 +215,16 @@ object CrossMatch {
         "pre-filter the catalog (decBandFilter)")
     // shared per-row byte estimate: CSR overhead + the payload struct's
     // own bytes (UnsafeRow view — no copy). 0 for rows the build skips.
-    val nP0 = nP
+    val nP = catDf.schema(payloadOrdinal).dataType.asInstanceOf[StructType].length
+    val pOrd = payloadOrdinal
     val overhead = PerRowOverheadBytes
-    val rowBytes = (r: org.apache.spark.sql.catalyst.InternalRow) =>
-      if (r.isNullAt(0) || r.isNullAt(1) ||
-          r.getDouble(0).isNaN || r.getDouble(1).isNaN) 0L
-      else overhead + (r.getStruct(2, nP0) match {
+    val rowBytes = (r: InternalRow) =>
+      if (!usable(r)) 0L
+      else overhead + (r.getStruct(pOrd, nP) match {
         case u: org.apache.spark.sql.catalyst.expressions.UnsafeRow =>
           u.getSizeInBytes.toLong
-        case _ => 8L * nP0 // non-unsafe fallback: field-count estimate
+        case _ => 8L * nP // non-unsafe fallback: field-count estimate
       })
-    val budget0 = budget
     val confKey = CatalogBytesConf
     val rawRdd = catDf.queryExecution.toRdd
     // bound toLocalIterator's one-job-per-partition cost for
@@ -197,17 +239,15 @@ object CrossMatch {
         // references to one reused UnsafeRow buffer
         val c = r.copy()
         pBytes += rowBytes(c)
-        if (pBytes > budget0) throw new IllegalArgumentException(
+        if (pBytes > budget) throw new IllegalArgumentException(
           s"crossmatch catalog index crossed the broadcast budget " +
-            s"within one partition: measured $pBytes B > $budget0 B " +
+            s"within one partition: measured $pBytes B > $budget B " +
             s"(conf $confKey); crossmatch the other way around or " +
             "pre-filter the catalog (decBandFilter)")
         c
       }
     }
-    val craB = Array.newBuilder[Double]
-    val cdecB = Array.newBuilder[Double]
-    val payB = Array.newBuilder[org.apache.spark.sql.catalyst.InternalRow]
+    val rows = Array.newBuilder[InternalRow]
     var measured = 0L
     var nCat = 0L
     // the executor-side per-partition meter surfaces as a task failure
@@ -222,8 +262,6 @@ object CrossMatch {
       while (it.hasNext) {
         val r = it.next()
         nCat += 1
-        // null/NaN catalog coordinates can never match (the old zone join
-        // dropped them via a null key) — skip them at build
         val rb = rowBytes(r)
         if (rb > 0L) {
           measured += rb
@@ -232,8 +270,7 @@ object CrossMatch {
               s"row $nCat: measured $measured B > $budget B " +
               s"(conf $CatalogBytesConf); crossmatch the other way " +
               "around or pre-filter the catalog (decBandFilter)")
-          craB += r.getDouble(0); cdecB += r.getDouble(1)
-          payB += r.getStruct(2, nP).copy()
+          rows += r
         }
       }
     } catch {
@@ -246,32 +283,52 @@ object CrossMatch {
           case None => throw e
         }
     }
-    val index = CatalogIndex.build(zh, radiusArcsec, craB.result(),
-      cdecB.result(), payB.result())
-    index.meteredBytes = measured
-    (index, payloadType)
+    (rows.result(), measured)
   }
 
   /** Label-style crossmatch: closest catalog `labelCol` within radius,
     * else "Unknown" — the crossmatch_other_catalog contract
     * (ztf/xmatch/processor.py:439-598). Labels are trimmed as the
-    * reference does (`str(i).strip()`).
+    * reference does (`str(i).strip()`). Writes `outCol` in one
+    * projection (replaced in place when the alerts already carry it).
     */
   def label(alerts: DataFrame, catalog: DataFrame, radiusArcsec: Double,
       idCol: String, raCol: String, decCol: String,
       catRa: String, catDec: String, labelCol: String,
       outCol: String): DataFrame = {
-    // collision-safe scratch name (review r15 ADVICE: a fixed "__label"
-    // collided with an alert column of the same name, producing
-    // duplicate/ambiguous columns after the rename) — same
-    // find-first-free pattern as closestWithin's mCol
-    val lCol = Iterator.from(0).map(i => s"__label$i")
-      .find(n => !alerts.columns.contains(n) && n != outCol).get
-    val cat = catalog.select(col(catRa), col(catDec),
-      trim(col(labelCol).cast("string")).as(lCol))
-    closestWithin(alerts, cat, radiusArcsec, idCol, raCol, decCol,
-      catRa, catDec, Seq(lCol), Map(lCol -> lit("Unknown")))
-      .withColumnRenamed(lCol, outCol)
+    val m = probe(col(raCol), col(decCol), catalog, radiusArcsec, catRa, catDec,
+      Seq(trim(col(labelCol).cast("string")).as("label")))
+    WithColumns(alerts,
+      Seq(outCol -> coalesce(m.getField("label"), lit("Unknown"))))
+  }
+
+  /** By-key lookup of a small static catalog, in place of a broadcast
+    * left join: the `payload` struct of the catalog row whose `keyCol`
+    * equals `key` (compared as strings), or null. Collected under the
+    * crossmatch byte budget and reused under the same rule as the index.
+    * Null keys never match. A key on two catalog rows raises
+    * IllegalArgumentException naming it, where a join would duplicate
+    * that key's alert rows.
+    */
+  def lookupByKey(key: Column, catalog: DataFrame, keyCol: String,
+      payload: Seq[Column]): Column = {
+    val catDf = catalog.select(col(keyCol).cast("string").as("__key"),
+      struct(payload: _*).as("__p"))
+    val payloadType = catDf.schema("__p").dataType.asInstanceOf[StructType]
+    val budget = catalogBytes(catalog)
+    val bc = CatalogReuse.broadcast(catDf, ("byKey", payloadType, budget)) {
+      val (rows, _) = collectMetered(catDf, budget, 1, !_.isNullAt(0))
+      val table = new java.util.HashMap[org.apache.spark.unsafe.types.UTF8String,
+        InternalRow](rows.length * 2)
+      rows.foreach { r =>
+        val k = r.getUTF8String(0).clone()
+        if (table.put(k, r.getStruct(1, payloadType.length).copy()) != null)
+          throw new IllegalArgumentException(s"catalog column $keyCol has " +
+            s"duplicate key '$k'; a by-key lookup needs one row per key")
+      }
+      table
+    }
+    CatalogLookup(key.cast("string"), bc, payloadType)
   }
 }
 

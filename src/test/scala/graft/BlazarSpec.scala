@@ -80,4 +80,19 @@ class BlazarSpec extends SparkSpec {
       .select("blazar_stats").head().getMap[String, Float](0)
     assert(known("cdf_quantile") >= 0.0f)
   }
+
+  test("a ZTF_name repeated in the catalog raises a named error instead of duplicating alerts") {
+    // a left join would emit the matched alert twice; the lookup
+    // refuses the catalog at plan construction
+    val dup = catalog.union(catalog.withColumn("Source_name", lit("SRC2")))
+    val e1 = intercept[IllegalArgumentException](StandardizedFlux(alerts, dup))
+    assert(e1.getMessage.contains("ZTF_name") && e1.getMessage.contains("ZTF19aaaaaaa"),
+      e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](ExtremeState(spark, withFlux, dup))
+    assert(e2.getMessage.contains("duplicate key 'ZTF19aaaaaaa'"), e2.getMessage)
+    // null names never match and are not duplicates
+    val nulls = catalog.union(catalog.withColumn("ZTF_name", lit(null).cast("string")))
+      .union(catalog.withColumn("ZTF_name", lit(null).cast("string")))
+    assert(StandardizedFlux(alerts, nulls).count() === 2)
+  }
 }

@@ -162,4 +162,24 @@ class ClassifiersSpec extends SparkSpec {
     val s2 = StubModels.forest("rf_snia", 26).score(x)
     assert(s1 === s2)
   }
+
+  test("kilonova scores gated synthetic alerts with the default components") {
+    // the stand-in components must share the real matrix's 401-sample
+    // grid (0.25 d over +-50 d): the PC1 interpolation indexes it for
+    // every gated alert when the model bundle is absent
+    assert(graft.operators.StubComponents.pc.forall(_.length === 401))
+    val series = AlertCols.withHistory(SyntheticAlerts.frame(spark, 40),
+        Seq("jd", "magpsf", "sigmapsf", "fid"))
+      .withColumn("cdsxmatch", lit("Galaxy"))
+    val gate = SelectionCuts.kilonovaGate(col("cmagpsf"), col("candidate.ndethist"),
+      col("cdsxmatch"))
+    val out = Classifiers.kilonova(spark, series)
+      .select(gate.as("gated"), col("pKNe")).collect()
+    assert(out.count(_.getBoolean(0)) >= 5, "the synthetic set must exercise the gate")
+    out.foreach { r =>
+      val p = r.getDouble(1)
+      if (r.getBoolean(0)) assert(p >= 0.0 && p <= 1.0, s"pKNe $p")
+      else assert(p === 0.0)
+    }
+  }
 }
