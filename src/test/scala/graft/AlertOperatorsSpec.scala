@@ -16,12 +16,14 @@ class AlertOperatorsSpec extends SparkSpec {
   private lazy val alerts = spark.read.parquet(ztfSample)
 
   test("fixture loads with the expected shape") {
+    ReferenceFixtures.assumePresent(ztfSample)
     assert(alerts.count() === 124)
     assert(alerts.columns.contains("candidate"))
     assert(alerts.columns.contains("prv_candidates"))
   }
 
   test("concat_col appends current after history") {
+    ReferenceFixtures.assumePresent(ztfSample)
     val df = AlertCols.concatCol(alerts, "jd")
     val r = df.select(col("cjd"), col("candidate.jd"),
       size(coalesce(col("prv_candidates"), array())).as("nh")).limit(50).collect()
@@ -38,6 +40,7 @@ class AlertOperatorsSpec extends SparkSpec {
   // null history entries compare equal and count as detections).
 
   test("nalerthist matches the fixture's production column row-wise") {
+    ReferenceFixtures.assumePresent(ztfSample)
     val df = Nalerthist.fromPacket(alerts.withColumnRenamed("nalerthist", "expected"))
     assert(df.filter(col("nalerthist") =!= col("expected")).count() === 0)
     val mm = df.agg(min("nalerthist"), max("nalerthist")).head()
@@ -46,6 +49,7 @@ class AlertOperatorsSpec extends SparkSpec {
   }
 
   test("roid matches the fixture's production column row-wise") {
+    ReferenceFixtures.assumePresent(ztfSample)
     val df = Asteroids(AlertCols.withHistory(
       alerts.withColumnRenamed("roid", "expected"), Seq("jd", "magpsf")))
     assert(df.filter(col("roid") =!= col("expected")).count() === 0)

@@ -9,6 +9,7 @@ class CdsXmatchSpec extends SparkSpec {
   private val catalogDir = "/root/reference/fink_science/data/catalogs"
 
   test("offline service yields the Fail sentinel for every alert") {
+    ReferenceFixtures.assumePresent("data/alerts/datatest")
     val alerts = spark.read.parquet("/root/reference/fink_science/data/alerts/datatest")
     val out = CdsXmatch.xmatchCds(spark, alerts, UnreachableXmatchService, "simbad")
     assert(out.filter(col("main_type") === "Fail").count() === 124)
@@ -33,6 +34,7 @@ class CdsXmatchSpec extends SparkSpec {
   }
 
   test("3hsp golden: doctest coordinate matches its source at 1.5 arcsec") {
+    ReferenceFixtures.assumePresent(s"$catalogDir/3hsp.csv")
     import spark.implicits._
     val fake = Seq(("4", 0.31820833, 29.59277778), ("1", 26.8566983, -26.9677112))
       .toDF("id", "ra", "dec")
@@ -45,6 +47,8 @@ class CdsXmatchSpec extends SparkSpec {
   }
 
   test("4lac golden: doctest coordinate matches its source at 60 arcsec") {
+    ReferenceFixtures.assumePresent(s"$catalogDir/table-4LAC-DR3-h.fits",
+      s"$catalogDir/table-4LAC-DR3-l.fits")
     import spark.implicits._
     val fake = Seq(("3", 0.3126, 47.6859), ("2", 101.3520545, 24.5421872))
       .toDF("id", "ra", "dec")

@@ -30,6 +30,7 @@ class ClassifiersSpec extends SparkSpec {
   }
 
   test("pIa: gated rows get 0.0, admitted rows a probability") {
+    ReferenceFixtures.assumePresent(ztfSample)
     val out = Classifiers.rfSnia(spark, enriched)
     val gate = SelectionCuts.sniaGate(col("cmagpsf"), col("candidate.ndethist"), col("cdsxmatch"))
     val n = out.count()
@@ -81,6 +82,7 @@ class ClassifiersSpec extends SparkSpec {
   }
 
   test("snn and kilonova and mulens run over the fixture with valid ranges") {
+    ReferenceFixtures.assumePresent(ztfSample)
     val out = Classifiers.microlensing(spark,
       Classifiers.kilonova(spark, Classifiers.snn(spark, enriched)))
     val bad = out.filter(
@@ -116,6 +118,7 @@ class ClassifiersSpec extends SparkSpec {
   }
 
   test("anomaly: min over valid bands, NaN when no valid band") {
+    ReferenceFixtures.assumePresent(ztfSample)
     val withFeatures = AdFeatures(spark, enriched)
     val out = Classifiers.anomaly(spark, withFeatures)
     // a band is valid only when all 25 MODEL_COLUMNS features are

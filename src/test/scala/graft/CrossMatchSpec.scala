@@ -29,6 +29,7 @@ class CrossMatchSpec extends SparkSpec {
   }
 
   test("gcvs crossmatch matches the reference doctest") {
+    ReferenceFixtures.assumePresent(s"$catalogDir/gcvs.parquet")
     val got = run(Catalogs.gcvs(spark, s"$catalogDir/gcvs.parquet"), 1.5)
     assert(got === Map("1" -> "Unknown", "2" -> "RR", "3" -> "Unknown", "4" -> "Unknown"))
   }

@@ -8,6 +8,7 @@ import graft.operators.{ExtendedClassifiers, Rubin, TransientFeatures}
 class ExtendedClassifiersSpec extends SparkSpec {
 
   test("superluminous: -1 sentinel outside the gate, probability inside") {
+    ReferenceFixtures.assumePresent("data/alerts/datatest")
     val alerts = spark.read.parquet("/root/reference/fink_science/data/alerts/datatest")
     val df = ExtendedClassifiers.superluminous(spark,
       AlertCols.withHistory(TransientFeatures(alerts),
@@ -21,6 +22,7 @@ class ExtendedClassifiersSpec extends SparkSpec {
   }
 
   test("superluminous photo-z veto only ever zeroes above-threshold scores") {
+    ReferenceFixtures.assumePresent("data/alerts/datatest")
     val alerts = spark.read.parquet("/root/reference/fink_science/data/alerts/datatest")
     val base = AlertCols.withHistory(TransientFeatures(alerts),
       Seq("jd", "fid", "magpsf", "sigmapsf"))
@@ -48,6 +50,8 @@ class ExtendedClassifiersSpec extends SparkSpec {
   }
 
   test("transient filter golden: exactly 2 of 57 alerts in part-00003 pass") {
+    ReferenceFixtures.assumePresent("data/alerts/datatest/" +
+      "part-00003-bdab8e46-89c4-4ac1-8603-facd71833e8a-c000.snappy.parquet")
     val df = spark.read.parquet("/root/reference/fink_science/data/alerts/datatest/" +
       "part-00003-bdab8e46-89c4-4ac1-8603-facd71833e8a-c000.snappy.parquet")
     val out = TransientFeatures(df)
@@ -57,6 +61,7 @@ class ExtendedClassifiersSpec extends SparkSpec {
   }
 
   test("rubin orphan + slsn scores respect sentinels and bounds") {
+    ReferenceFixtures.assumePresent("data/alerts/or4_lsst7.1")
     val alerts = spark.read.parquet("/root/reference/fink_science/data/alerts/or4_lsst7.1")
     val series = Rubin.withHistory(alerts,
       Seq("psfFlux", "psfFluxErr", "midpointMjdTai", "band"))

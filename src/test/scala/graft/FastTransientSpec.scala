@@ -19,6 +19,7 @@ class FastTransientSpec extends SparkSpec {
   }
 
   test("deterministic fields match the reference kernel row-wise") {
+    ReferenceFixtures.assumePresent(ztfSample)
     val got = enriched.select("candid", "jd_first_real_det", "jdstarthist_dt",
       "delta_time", "from_upper")
     // pandas to_parquet stores NaN as null; restore NaN for comparison
@@ -39,6 +40,7 @@ class FastTransientSpec extends SparkSpec {
   }
 
   test("MC statistics are internally consistent and converge") {
+    ReferenceFixtures.assumePresent(ztfSample)
     val rows = enriched.select("mag_rate", "sigma_rate", "lower_rate",
       "upper_rate", "delta_time").filter(!isnan(col("mag_rate"))).collect()
     assert(rows.nonEmpty)

@@ -58,6 +58,7 @@ class FullPipelineSpec extends SparkSpec {
   }
 
   test("full 18-step DAG enriches the fixture through streaming") {
+    ReferenceFixtures.assumePresent(path)
     val schema = spark.read.parquet(path).schema
     val results = new ConcurrentLinkedQueue[Map[String, Long]]()
     val stream = spark.readStream.schema(schema)

@@ -10,6 +10,7 @@ class HostlessSpec extends SparkSpec {
   val fixture = "/root/reference/fink_science/data/alerts/hostless_detection/part-0-0-435829.parquet"
 
   test("FITS stamps decode to 63x63 float images") {
+    ReferenceFixtures.assumePresent(fixture)
     val df = spark.read.parquet(fixture)
       .select(col("cutoutScience.stampData").as("sci")).limit(5)
     df.collect().foreach { r =>
@@ -52,6 +53,7 @@ class HostlessSpec extends SparkSpec {
   }
 
   test("base hostless golden: 3 of 72 fixtures get a non-negative statistic") {
+    ReferenceFixtures.assumePresent(fixture)
     val df = spark.read.parquet(fixture)
     val out = HostlessDetection.base(spark, df, iterations = 100)
     val processed = out.filter(col("kstest_static")(0) >= 0)

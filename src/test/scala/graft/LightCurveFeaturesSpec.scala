@@ -33,6 +33,7 @@ class LightCurveFeaturesSpec extends AnyFunSuite {
 
   ids.foreach { id =>
     test(s"features for $id match the reference goldens within 5%") {
+      ReferenceFixtures.assumePresent(s"$dir/$id.csv", s"$dir/$id.features")
       val (t, m, s) = readCsv(id)
       val got = LightCurveFeatures.names.zip(LightCurveFeatures.extract(t, m, s)).toMap
       val expected = readExpected(id)
@@ -49,6 +50,7 @@ class LightCurveFeaturesSpec extends AnyFunSuite {
   }
 
   test("alert-level extraction yields per-band maps, i-band dropped") {
+    ReferenceFixtures.assumePresent("data/alerts/datatest")
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[4]").config("spark.ui.enabled", "false").getOrCreate()
     val alerts = spark.read.parquet("/root/reference/fink_science/data/alerts/datatest")

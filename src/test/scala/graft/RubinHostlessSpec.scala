@@ -10,6 +10,7 @@ class RubinHostlessSpec extends SparkSpec {
   val rubinSample = "/root/reference/fink_science/data/alerts/or4_lsst7.1"
 
   test("rubin cutouts decode as plain FITS") {
+    ReferenceFixtures.assumePresent(rubinSample)
     val rows = spark.read.parquet(rubinSample)
       .select(col("cutoutScience")).limit(5).collect()
     val decoded = rows.flatMap(r => Fits.read(r.getAs[Array[Byte]](0)))
@@ -18,6 +19,7 @@ class RubinHostlessSpec extends SparkSpec {
   }
 
   test("rubin hostless base runs over the fixture with sentinels") {
+    ReferenceFixtures.assumePresent(rubinSample)
     val df = spark.read.parquet(rubinSample)
     val out = RubinHostless.base(spark, df, iterations = 30)
     val res = out.select("kstest_static").collect()

@@ -15,6 +15,7 @@ class RubinSpec extends SparkSpec {
     Seq("psfFlux", "psfFluxErr", "midpointMjdTai", "band"))
 
   test("rubin fixture loads and concat_col builds flux series") {
+    ReferenceFixtures.assumePresent(rubinSample)
     assert(alerts.count() === 50)
     val r = withSeries.select("cpsfFlux", "cmidpointMjdTai").limit(10).collect()
     r.foreach { row =>
@@ -24,6 +25,7 @@ class RubinSpec extends SparkSpec {
   }
 
   test("rubin nalerthist counts real flux measurements") {
+    ReferenceFixtures.assumePresent(rubinSample)
     val out = Rubin.nalerthist(withSeries)
     val mm = out.agg(min("nalerthist"), max("nalerthist")).head()
     assert(mm.getInt(0) >= 1)
@@ -31,6 +33,7 @@ class RubinSpec extends SparkSpec {
   }
 
   test("rubin ad features: per-band-letter maps over flux space") {
+    ReferenceFixtures.assumePresent(rubinSample)
     val out = Rubin.adFeatures(spark, withSeries)
     val rows = out.select("cband", "lc_features").limit(10).collect()
     rows.foreach { r =>
@@ -41,6 +44,7 @@ class RubinSpec extends SparkSpec {
   }
 
   test("rubin snn + cats produce bounded scores and a class index") {
+    ReferenceFixtures.assumePresent(rubinSample)
     val out = Rubin.catsBroadClass(spark, Rubin.snn(spark, withSeries))
     val bad = out.filter(col("snn_sn_vs_all") < 0 || col("snn_sn_vs_all") > 1).count()
     assert(bad === 0)
@@ -49,6 +53,7 @@ class RubinSpec extends SparkSpec {
   }
 
   test("rubin TNS crossmatch returns typed struct payload, null unmatched") {
+    ReferenceFixtures.assumePresent(rubinSample)
     import spark.implicits._
     // synthetic TNS catalog: one source on top of the first alert
     val first = alerts.select(col("diaSource.ra"), col("diaSource.dec")).head()
@@ -66,6 +71,7 @@ class RubinSpec extends SparkSpec {
   }
 
   test("elasticc adapter: canonical series feed the Rubin operators unchanged") {
+    ReferenceFixtures.assumePresent("data/alerts/elasticc_sample_seed0.parquet")
     val el = spark.read.parquet(
       "/root/reference/fink_science/data/alerts/elasticc_sample_seed0.parquet")
     val series = Rubin.fromElasticc(el)
@@ -76,6 +82,7 @@ class RubinSpec extends SparkSpec {
   }
 
   test("rubin crossmatch works against a dec-band-filtered catalog") {
+    ReferenceFixtures.assumePresent(rubinSample, "data/catalogs/gcvs.parquet")
     val a = alerts.select(col("alertId").as("id"),
       col("diaSource.ra").as("ra"), col("diaSource.dec").as("dec"))
     val stats = a.agg(min("dec"), max("dec")).head()

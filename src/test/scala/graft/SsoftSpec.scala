@@ -78,6 +78,7 @@ class SsoftSpec extends SparkSpec {
   }
 
   test("SSOFT spin build runs on the 3-object fixture") {
+    ReferenceFixtures.assumePresent(fixture)
     val agg = spark.read.parquet(fixture)
     val out = Ssoft.buildWithSpin(spark, agg, nmin = 50)
     val rows = out.select("ssnamenr", "spin.h_g", "spin.oblateness",
@@ -162,6 +163,7 @@ class SsoftSpec extends SparkSpec {
   }
 
   test("SSOFT table carries astrometry + per-filter time-lapse stats") {
+    ReferenceFixtures.assumePresent(fixture)
     val agg = spark.read.parquet(fixture)
     val out = Ssoft.build(spark, agg, nmin = 50).collect()
     assert(out.nonEmpty)
@@ -215,6 +217,7 @@ class SsoftSpec extends SparkSpec {
   }
 
   test("SSOFT build on the 3-object fixture yields per-band parameters") {
+    ReferenceFixtures.assumePresent(fixture)
     val agg = spark.read.parquet(fixture)
     val out = Ssoft.build(spark, agg, nmin = 50)
     val rows = out.collect()

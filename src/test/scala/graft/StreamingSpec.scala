@@ -16,6 +16,7 @@ class StreamingSpec extends SparkSpec {
 
   test("enrichment pipeline runs inside foreachBatch and matches batch results") {
     val path = "/root/reference/fink_science/data/alerts/datatest"
+    ReferenceFixtures.assumePresent(path)
     val schema = spark.read.parquet(path).schema
 
     val enrich: AlertPipeline.Module = AlertPipeline.pipeline(

@@ -78,9 +78,40 @@ class StubIsolationSpec extends SparkSpec {
   test("every stub-backed operator surfaces its engagement flag") {
     // each *_is_stub / *_approx flag must reflect the model bank state,
     // pinned here in one place (operator specs assert per-fixture)
+    import org.apache.spark.sql.functions._
+    import graft.alerts.AlertCols
     import graft.models.RefModels
-    assert(RefModels.mulensForest.isDefined, "rf.sav should load offline")
-    assert(RefModels.superluminousXgb.isDefined, "slsn xgb should load offline")
-    assert(RefModels.cats.isDefined, "cats archive should load offline")
+    import graft.operators._
+    import graft.xmatch.CrossMatch
+    val rows = SyntheticAlerts.rows(20)
+    val series = TransientFeatures(Asteroids(CrossMatch.label(
+      AlertCols.withHistory(SyntheticAlerts.frame(spark, rows.length),
+        Seq("jd", "magpsf", "sigmapsf", "fid", "diffmaglim", "distnr", "magnr",
+          "sigmagnr", "isdiffpos", "ra", "dec")),
+      SyntheticAlerts.xmatchCatalog(spark, rows), 1.5,
+      "candid", "candidate.ra", "candidate.dec", "ra", "dec", "label", "cdsxmatch")))
+    val out = ExtendedClassifiers.superluminous(spark,
+      Classifiers.microlensing(spark,
+        Classifiers.kilonova(spark, Classifiers.rfSnia(spark, series))))
+    val expected = Seq(
+      "pIa_is_stub" -> RefModels.alSniaScorer.isEmpty,
+      "pKNe_is_stub" -> RefModels.kilonova.isEmpty,
+      "mulens_is_stub" -> RefModels.mulensForest.isEmpty,
+      "superluminous_score_is_stub" -> RefModels.superluminousXgb.isEmpty)
+    val flags = out.select(expected.map(e => col(e._1)): _*).distinct().collect()
+    assert(flags.length === 1, "a stub flag varies across rows")
+    expected.zipWithIndex.foreach { case ((flag, want), i) =>
+      assert(flags(0).getBoolean(i) === want, s"$flag diverged from the model bank")
+    }
+    // RefModels swallows a load error into None: an artifact that is
+    // present must load rather than silently fall back to a stand-in
+    Seq(
+      "rf.sav" -> RefModels.mulensForest,
+      "superluminous_classifier.joblib" -> RefModels.superluminousXgb,
+      "cats_models/cats_small_nometa_serial.keras" -> RefModels.cats)
+      .foreach { case (rel, entry) =>
+        if (new java.io.File(RefModels.dir, rel).isFile)
+          assert(entry.isDefined, s"$rel is present but did not load")
+      }
   }
 }

@@ -14,12 +14,14 @@ class TransientFeaturesSpec extends SparkSpec {
   val expectedPath = "src/test/resources/transient_features_expected.parquet"
 
   test("adds exactly the 7 feature columns") {
+    ReferenceFixtures.assumePresent(ztfSample)
     val alerts = spark.read.parquet(ztfSample)
     val out = TransientFeatures(alerts)
     assert(out.columns.length === alerts.columns.length + 7)
   }
 
   test("features match the reference output row-wise (nulls included)") {
+    ReferenceFixtures.assumePresent(ztfSample)
     val alerts = spark.read.parquet(ztfSample)
     val out = TransientFeatures(alerts)
       .select("candid", TransientFeatures.featureColumns: _*)

@@ -133,6 +133,7 @@ class WinnowFinkClassSpec extends SparkSpec {
   }
 
   test("fink classification cascade over the hostless fixture") {
+    ReferenceFixtures.assumePresent("data/alerts/hostless_detection/part-0-0-435829.parquet")
     val df = spark.read.parquet(
       "/root/reference/fink_science/data/alerts/hostless_detection/part-0-0-435829.parquet")
     val out = FinkClassification(df)
@@ -144,6 +145,7 @@ class WinnowFinkClassSpec extends SparkSpec {
   }
 
   test("gated hostless runs with computed finkclass (end-to-end DAG)") {
+    ReferenceFixtures.assumePresent("data/alerts/hostless_detection/part-0-0-435829.parquet")
     val df = spark.read.parquet(
       "/root/reference/fink_science/data/alerts/hostless_detection/part-0-0-435829.parquet")
     val withClass = FinkClassification(df)
