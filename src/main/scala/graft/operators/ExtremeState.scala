@@ -134,7 +134,8 @@ object ExtremeState {
   /** Appends `blazar_stats`; expects cstd_flux/cjd/cra/cdec series
     * ([[StandardizedFlux]]). The thresholds come from the CTAO catalog
     * through the lookup StandardizedFlux uses: `cache()` the catalog to
-    * build it once; an uncached catalog is re-read on every call.
+    * build it once; an uncached catalog is re-read on every call (a
+    * streaming query calls once, at start).
     */
   def apply(spark: SparkSession, df: DataFrame, catalog: DataFrame,
       client: DrLightCurveClient = NoDrLightCurve): DataFrame = {

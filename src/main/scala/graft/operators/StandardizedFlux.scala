@@ -14,10 +14,13 @@ import graft.xmatch.CrossMatch
   *
   * The catalog lookup ([[blazarLookup]], shared with [[ExtremeState]])
   * is collected and broadcast under the crossmatch byte budget. Call
-  * `cache()` on the catalog to build it once for every micro-batch: a
-  * cached catalog's lookup is reused while the cache is held, while a
-  * file-backed (uncached) catalog is re-read on every call. A
-  * `ZTF_name` repeated in the catalog raises IllegalArgumentException.
+  * `cache()` on the catalog to build it once across calls: a cached
+  * catalog's lookup is reused while the cache is held, while a
+  * file-backed (uncached) catalog is re-read on every call. A streaming
+  * query ([[graft.streaming.AlertPipeline]]) calls once, at start, so
+  * its micro-batches all use the catalog as it was then; restart the
+  * query to pick up a changed catalog. A `ZTF_name` repeated in the
+  * catalog raises IllegalArgumentException.
   *
   * Appends `cstd_flux` and `csigma_std_flux` array columns: per-epoch DC
   * flux (Jansky) divided by the catalog's per-band median; epochs with

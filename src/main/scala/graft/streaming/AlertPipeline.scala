@@ -1,6 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project,
+  SubqueryAlias}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
@@ -10,7 +12,22 @@ import org.apache.spark.sql.Row
   * runs the science modules inside Structured Streaming micro-batches,
   * and all history travels *inside* each alert packet (prv_candidates),
   * so the pipeline is stateless: no watermark, no cross-batch state.
-  * That makes the streaming wrapper exactly `foreachBatch(enrich)`.
+  * The streaming wrapper therefore applies the enrichment once, to the
+  * streaming DataFrame, and hands each enriched micro-batch to the sink:
+  * `enrich(stream).writeStream.foreachBatch(sink)`. Structured Streaming
+  * analyses the module DAG once at query start and per batch only swaps
+  * the source leaf, instead of rebuilding and re-analysing the DAG for
+  * every micro-batch.
+  *
+  * Contract: `enrich(stream)` must be row-local — every streaming node
+  * of its analysed plan is a `Project`, `Filter`, `SubqueryAlias` or the
+  * source leaf. A module that aggregates, joins or deduplicates would
+  * turn the query into a stateful streaming query (other semantics, or
+  * rejected by Spark), so [[streamingWriter]] refuses it before start;
+  * run such a module per batch inside your own `foreachBatch`. What a
+  * module captures on the driver when it is applied (a catalog's
+  * broadcast lookup) is captured once per query: restart the query to
+  * pick up a changed catalog.
   *
   * A module is `DataFrame => DataFrame` appending columns (the
   * reference's universal contract, SURVEY.md §1.1); `Pipeline` composes
@@ -24,15 +41,34 @@ object AlertPipeline {
   def pipeline(modules: Module*): Module =
     df => modules.foldLeft(df)((d, m) => m(d))
 
-  /** Wrap a batch pipeline for a streaming source: each micro-batch is
-    * enriched independently and handed to `sink`.
+  /** Enrich a streaming source once and hand each enriched micro-batch
+    * to `sink`. Throws IllegalArgumentException, naming the operator,
+    * when `enrich` is not row-local on the stream.
     */
   def streamingWriter(stream: DataFrame, enrich: Module,
       sink: (DataFrame, Long) => Unit,
-      trigger: Trigger = Trigger.ProcessingTime("5 seconds")): DataStreamWriter[Row] =
-    stream.writeStream
+      trigger: Trigger = Trigger.ProcessingTime("5 seconds")): DataStreamWriter[Row] = {
+    val enriched = enrich(stream)
+    firstNonRowLocal(enriched.queryExecution.analyzed).foreach { op =>
+      throw new IllegalArgumentException(s"the enrichment plans a streaming " +
+        s"${op.nodeName}, which is not row-local (only Project, Filter and " +
+        "SubqueryAlias may sit over the source); run such a module per batch " +
+        "inside your own foreachBatch")
+    }
+    enriched.writeStream
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, id: Long) => sink(enrich(batch), id) }
+      .foreachBatch(sink)
+  }
+
+  /** The streaming node nearest the source that is not a projection,
+    * filter, alias or leaf.
+    */
+  private def firstNonRowLocal(plan: LogicalPlan): Option[LogicalPlan] =
+    plan.children.iterator.flatMap(firstNonRowLocal).nextOption().orElse(plan match {
+      case _: Project | _: Filter | _: SubqueryAlias | _: LeafNode => None
+      case p if p.isStreaming => Some(p)
+      case _ => None
+    })
 
   /** Convenience: run the enrichment over a file-based stream until all
     * available data is processed (local smoke / tests).

@@ -777,8 +777,9 @@ object StreamingOps {
     * depends only on its own grams and the static benchmark, so
     * batch == stream under ANY batch split, with no cross-batch state,
     * watermark, or ordering requirement — which is why this is a
-    * foreachBatch module (the broker shape) rather than a stateful
-    * operator.
+    * per-batch function, applied inside the caller's own foreachBatch,
+    * rather than a stateful operator. It emits a report rather than
+    * appending columns, so it is not an [[AlertPipeline]] module.
     *
     * The benchmark is summarized ONCE at module build: its exploded
     * gram table is cached (the exact verify side) and its Bloom filter

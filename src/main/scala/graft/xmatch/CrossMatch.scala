@@ -36,7 +36,11 @@ import org.apache.spark.sql.graft.WithColumns
   * Call `cache()` on a static catalog to build its index once: while
   * the cache is held, later calls reuse the broadcast index with no job
   * ([[org.apache.spark.sql.graft.CatalogReuse]]). A file-backed
-  * (uncached) catalog is re-read and re-indexed on every call. The
+  * (uncached) catalog is re-read and re-indexed on every call. A
+  * streaming query makes that call once, at start
+  * ([[graft.streaming.AlertPipeline]]): every micro-batch matches
+  * against the catalog as it was then, cached or not, even after its
+  * cache is dropped. Restart the query to pick up a changed catalog. The
   * declination-band catalog pre-filter of the Rubin variants
   * (rubin/xmatch/processor.py:455-467) falls out of zoning for free.
   */

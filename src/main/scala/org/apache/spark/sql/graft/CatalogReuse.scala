@@ -82,6 +82,8 @@ object CatalogReuse {
   * broadcast left join against a small catalog with one scalar
   * expression, so the alert side keeps a single projection and a
   * repeated catalog key fails at build instead of duplicating rows.
+  * CodegenFallback, like [[ClosestCatalogProbe]]: the projection that
+  * holds the lookup is not whole-stage compiled.
   */
 case class CatalogLookup(key: Expression,
     tableBc: Broadcast[java.util.HashMap[UTF8String, InternalRow]],

@@ -182,8 +182,11 @@ object CatalogIndex {
   * movement is the one-time catalog broadcast.
   *
   * CodegenFallback: the per-row work is the candidate haversine loop
-  * itself, which generated code could not meaningfully improve, and the
-  * surrounding projection still whole-stage-compiles around the call.
+  * itself, which generated code could not meaningfully improve. The
+  * price is that the projection holding the call is not whole-stage
+  * compiled: Spark keeps any operator with a CodegenFallback expression
+  * out of WholeStageCodegen, so that projection runs on its own,
+  * through an `UnsafeProjection` every task generates afresh.
   */
 case class ClosestCatalogProbe(ra: Expression, dec: Expression,
     indexBc: Broadcast[CatalogIndex], payloadType: StructType)

@@ -192,10 +192,10 @@ object CellIndex {
   * lowest candidate cell (NOT null-out — the join form assigns such
   * rows, it does not drop them).
   *
-  * CodegenFallback, the [[ClosestCatalogProbe]] rationale: the per-row
-  * work IS the candidate distance loop, which generated code could not
-  * meaningfully improve, and the surrounding projection still
-  * whole-stage-compiles around the call.
+  * CodegenFallback, the [[ClosestCatalogProbe]] rationale and price: the
+  * per-row work IS the candidate distance loop, which generated code
+  * could not meaningfully improve, and the projection holding the call
+  * is left out of whole-stage codegen.
   */
 case class NearestCell(child: Expression, bc: Broadcast[CellIndex])
     extends UnaryExpression with ExpectsInputTypes with CodegenFallback {

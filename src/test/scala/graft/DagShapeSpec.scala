@@ -1,6 +1,7 @@
 package graft
 
 import java.util.concurrent.ConcurrentLinkedQueue
+import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, Project}
@@ -15,7 +16,8 @@ import graft.xmatch.CrossMatch
 /** The 18-step ZTF enrichment DAG over synthetic packets (no reference
   * fixture): pins the logical-plan shape each module adds — one
   * projection, no join — the output columns and their order, and that
-  * the streaming path returns the batch path's rows.
+  * the streaming path builds the DAG once per query and returns the
+  * batch path's rows.
   */
 class DagShapeSpec extends SparkSpec {
 
@@ -98,16 +100,20 @@ class DagShapeSpec extends SparkSpec {
     SyntheticAlerts.frame(spark, rows.length, partitions = 3)
       .write.mode("overwrite").parquet(dir)
     val got = new ConcurrentLinkedQueue[Row]()
-    val batches = new java.util.concurrent.atomic.AtomicInteger(0)
+    val batches = new AtomicInteger(0)
+    val built = new AtomicInteger(0)
+    val counted: AlertPipeline.Module = df => { built.incrementAndGet(); enrich(df) }
     val stream = spark.readStream.schema(SyntheticAlerts.schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = AlertPipeline.runOnce(stream, enrich, (b, _) => {
+    // runOnce goes through streamingWriter's row-local guard
+    val q = AlertPipeline.runOnce(stream, counted, (b, _) => {
       batches.incrementAndGet()
       b.collect().foreach(got.add)
     })
     q.awaitTermination(300000)
     assert(q.exception.isEmpty, q.exception.toString)
-    assert(batches.get() >= 2, "expected several micro-batches")
+    assert(batches.get() >= 3, "expected several micro-batches")
+    assert(built.get() === 1, s"the DAG was built ${built.get()} times for ${batches.get()} batches")
     assert(canon(got.toArray(Array.empty[Row])) === batch)
   }
 }

@@ -542,7 +542,6 @@ class StreamingOpsSpec extends SparkSpec {
   }
 
   test("streaming decontamination: per-batch reports union to the batch d7/d12 report") {
-    import graft.streaming.AlertPipeline
     val docs = Tables.t(spark, sf, "documents")
     val bench = docs.filter(col("doc_id") % 97 === 0)
     val corpus = docs.filter(col("doc_id") % 97 =!= 0)
@@ -555,8 +554,13 @@ class StreamingOpsSpec extends SparkSpec {
     val schema = spark.read.parquet(dir).schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(dir)
-    val q = AlertPipeline.runOnce(stream, module,
-      (batch, _) => outputs.add(batch.collect()))
+    // the module reports per batch (a join and an aggregation), so it
+    // runs inside the query's own foreachBatch, not as a stream module
+    val q = stream.writeStream.trigger(Trigger.AvailableNow())
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        outputs.add(module(batch).collect()); ()
+      }
+      .start()
     q.awaitTermination(300000)
 
     val got = outputs.toArray(Array.empty[Array[org.apache.spark.sql.Row]])

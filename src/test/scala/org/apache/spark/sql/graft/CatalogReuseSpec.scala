@@ -1,19 +1,24 @@
 package org.apache.spark.sql.graft
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 import graft.operators.{ExtremeState, StandardizedFlux}
+import graft.streaming.AlertPipeline
 import graft.xmatch.CrossMatch
 
 /** The catalog reuse rule: a catalog lookup is built once while the
   * catalog's data is cached and the cache is held, and rebuilt on every
   * call otherwise. Jobs are counted with a SparkListener; broadcasts by
-  * the ids the planned expressions carry.
+  * the ids the planned expressions carry. A streaming query captures
+  * its lookup once, at start.
   */
 class CatalogReuseSpec extends SparkSpec {
 
@@ -110,6 +115,37 @@ class CatalogReuseSpec extends SparkSpec {
     assert(labels(b)("A") === "FIRST")
     catalog("SECOND").write.mode("overwrite").parquet(dir)
     assert(labels(label(spark.read.parquet(dir)))("A") === "SECOND")
+  }
+
+  test("a running stream keeps its start-time catalog lookup; a restarted query sees the new catalog") {
+    import spark.implicits._
+    var cat = catalog("FIRST").cache()
+    val seen = new ConcurrentHashMap[String, String]()
+    val source = MemoryStream[(String, Double, Double)](spark, 1)
+    val ckpt = java.nio.file.Files.createTempDirectory("xmatch-stream").toString
+    def start() = AlertPipeline.streamingWriter(source.toDF().toDF("id", "ra", "dec"),
+        df => CrossMatch.label(df, cat, 1.5, "id", "ra", "dec", "cra", "cdec", "lab", "out"),
+        (b, _) => b.select("id", "out").collect().foreach(r => seen.put(r.getString(0), r.getString(1))),
+        Trigger.ProcessingTime(0L))
+      .option("checkpointLocation", ckpt).start()
+    def labelOf(q: org.apache.spark.sql.streaming.StreamingQuery, id: String): String = {
+      source.addData((id, 10.0, 20.0))
+      q.processAllAvailable()
+      seen.get(id)
+    }
+    val first = start()
+    try {
+      assert(labelOf(first, "A1") === "FIRST")
+      cat.unpersist(blocking = true)
+      cat = catalog("SECOND").cache()
+      // a new call evicts the dropped entry and unpersists its broadcast
+      assert(labels(label(cat))("A") === "SECOND")
+      assert(labelOf(first, "A2") === "FIRST", "a running query keeps its start-time snapshot")
+      assert(first.exception.isEmpty, first.exception.toString)
+    } finally first.stop()
+    val restarted = start()
+    try assert(labelOf(restarted, "A3") === "SECOND")
+    finally { restarted.stop(); cat.unpersist() }
   }
 
   test("the blazar modules share one lookup of a cached catalog") {
