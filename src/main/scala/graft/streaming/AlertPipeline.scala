@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, LeafNode, LogicalPlan, Project,
-  SubqueryAlias}
+import org.apache.spark.sql.catalyst.plans.logical.{DeserializeToObject, Filter, Generate,
+  Join, LeafNode, LogicalPlan, MapElements, MapPartitions, Project, Repartition,
+  RepartitionByExpression, Sample, SerializeFromObject, SubqueryAlias, TypedFilter, Union}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
@@ -20,11 +21,15 @@ import org.apache.spark.sql.Row
   * every micro-batch.
   *
   * Contract: `enrich(stream)` must be row-local — every streaming node
-  * of its analysed plan is a `Project`, `Filter`, `SubqueryAlias` or the
-  * source leaf. A module that aggregates, joins or deduplicates would
-  * turn the query into a stateful streaming query (other semantics, or
-  * rejected by Spark), so [[streamingWriter]] refuses it before start;
-  * run such a module per batch inside your own `foreachBatch`. What a
+  * of its analysed plan maps, filters or routes rows one at a time:
+  * a projection, filter or alias, a typed `map`/`mapPartitions`, an
+  * `explode`, a union, a repartition, a sample, a join of the stream
+  * with a static table, or the source leaf. A module that aggregates,
+  * deduplicates, sorts, limits, ranks in a window or joins two streams
+  * would turn the query into a stateful streaming query (other
+  * semantics, or rejected by Spark), so [[streamingWriter]] refuses it
+  * before start, naming the operator; run such a module per batch
+  * inside your own `foreachBatch`. What a
   * module captures on the driver when it is applied (a catalog's
   * broadcast lookup) is captured once per query: restart the query to
   * pick up a changed catalog.
@@ -51,21 +56,22 @@ object AlertPipeline {
     val enriched = enrich(stream)
     firstNonRowLocal(enriched.queryExecution.analyzed).foreach { op =>
       throw new IllegalArgumentException(s"the enrichment plans a streaming " +
-        s"${op.nodeName}, which is not row-local (only Project, Filter and " +
-        "SubqueryAlias may sit over the source); run such a module per batch " +
-        "inside your own foreachBatch")
+        s"${op.nodeName}, which is not row-local (it would make the query " +
+        "stateful); run such a module per batch inside your own foreachBatch")
     }
     enriched.writeStream
       .trigger(trigger)
       .foreachBatch(sink)
   }
 
-  /** The streaming node nearest the source that is not a projection,
-    * filter, alias or leaf.
-    */
+  /** The streaming node nearest the source that is not row-local. */
   private def firstNonRowLocal(plan: LogicalPlan): Option[LogicalPlan] =
     plan.children.iterator.flatMap(firstNonRowLocal).nextOption().orElse(plan match {
-      case _: Project | _: Filter | _: SubqueryAlias | _: LeafNode => None
+      case _: Project | _: Filter | _: SubqueryAlias | _: LeafNode |
+          _: DeserializeToObject | _: SerializeFromObject | _: MapPartitions |
+          _: MapElements | _: TypedFilter | _: Generate | _: Union |
+          _: Repartition | _: RepartitionByExpression | _: Sample => None
+      case j: Join if !(j.left.isStreaming && j.right.isStreaming) => None
       case p if p.isStreaming => Some(p)
       case _ => None
     })

@@ -1,13 +1,13 @@
 package graft.xmatch
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Remote catalog crossmatch (the reference's `cdsxmatch` family,
   * ztf/xmatch/processor.py:46-302): alerts are batched to an external
   * service (CDS xmatch at cdsxmatch.u-strasbg.fr in production), the
-  * reply parsed, deduplicated to the closest match per alert, and the
+  * reply parsed, reduced to the closest match per alert, and the
   * requested columns appended with the Fail/Unknown sentinel contract:
   *
   *  - service unreachable -> "Fail" for every row of the batch
@@ -40,44 +40,56 @@ object CdsXmatch {
   /** Append `colsOut` from the closest remote match within
     * `distMaxArcsec`; executes the service call once per partition
     * (the reference's per-Arrow-batch POST, processor.py:136-149).
+    *
+    * Row-local: one typed `mapPartitions` buffers a partition's alerts,
+    * queries the service once and appends each alert's closest match in
+    * place, with no join or window, so the module can run on a stream
+    * ([[graft.streaming.AlertPipeline]]). An alert with a null id or
+    * coordinate is not sent and gets null columns.
     */
   def xmatchCds(spark: SparkSession, df: DataFrame, service: XmatchService,
       catalogName: String, distMaxArcsec: Double = 1.0,
       idCol: String = "candid", raCol: String = "candidate.ra",
       decCol: String = "candidate.dec",
       colsOut: Seq[String] = Seq("main_type")): DataFrame = {
-    import spark.implicits._
-
-    val coords = df.select(col(idCol).cast("long").as("__id"),
+    val width = df.schema.length
+    val probe = df.select(col("*"), col(idCol).cast("long").as("__id"),
       col(raCol).cast("double").as("__ra"), col(decCol).cast("double").as("__dec"))
+    val outSchema = StructType(df.schema.fields ++
+      colsOut.map(StructField(_, StringType, nullable = true)))
 
-    val matches = coords.mapPartitions { it =>
-      val rows = it.map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
-      if (rows.isEmpty) Iterator.empty
-      else {
-        val result: Seq[(Long, Double, Map[String, String])] =
-          try service.query(rows, catalogName, distMaxArcsec, colsOut)
-          catch {
-            case _: Exception =>
-              // whole-batch failure sentinel
-              rows.map(r => (r._1, Double.NaN, colsOut.map(_ -> "Fail").toMap))
-          }
-        val matched = result.map(_._1).toSet
-        val unmatched = rows.filterNot(r => matched.contains(r._1))
-          .map(r => (r._1, Double.NaN, colsOut.map(_ -> "Unknown").toMap))
-        (result ++ unmatched).iterator
+    probe.mapPartitions { it =>
+      val alerts = it.toVector
+      val coords = alerts.collect {
+        case r if !r.isNullAt(width) && !r.isNullAt(width + 1) && !r.isNullAt(width + 2) =>
+          (r.getLong(width), r.getDouble(width + 1), r.getDouble(width + 2))
       }
-    }.toDF("__id", "__angDist", "__payload")
+      val best = if (coords.isEmpty) Map.empty[Long, Map[String, String]]
+        else closest(coords, colsOut,
+          try service.query(coords, catalogName, distMaxArcsec, colsOut)
+          catch {
+            // whole-batch failure sentinel (processor.py:151-153)
+            case _: Exception => coords.map(c => (c._1, Double.NaN, colsOut.map(_ -> "Fail").toMap))
+          })
+      alerts.iterator.map { r =>
+        val payload = if (r.isNullAt(width)) None else best.get(r.getLong(width))
+        Row.fromSeq(r.toSeq.take(width) ++
+          colsOut.map(c => payload.flatMap(_.get(c)).orNull))
+      }
+    }(Encoders.row(outSchema))
+  }
 
-    // closest-match dedup (groupby-min angDist, processor.py:168)
-    val w = Window.partitionBy(col("__id"))
-      .orderBy(col("__angDist").asc_nulls_last)
-    val best = matches.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select((col("__id") +: colsOut.map(c =>
-        element_at(col("__payload"), c).as(c))): _*)
-
-    df.join(best, df(idCol) === best("__id"), "left")
-      .drop("__id")
+  /** Each queried id's payload: its closest match (smallest angDist,
+    * NaN last, first reply on a tie — the reference's groupby-min,
+    * processor.py:168), or the Unknown sentinel when the service
+    * returned none (processor.py:190-195).
+    */
+  private def closest(coords: Seq[(Long, Double, Double)], colsOut: Seq[String],
+      result: Seq[(Long, Double, Map[String, String])]): Map[Long, Map[String, String]] = {
+    val nearest = result.groupBy(_._1).map { case (id, ms) =>
+      id -> ms.reduceLeft((a, b) => if (java.lang.Double.compare(b._2, a._2) < 0) b else a)._3
+    }
+    val unknown = colsOut.map(_ -> "Unknown").toMap
+    coords.map(c => c._1 -> nearest.getOrElse(c._1, unknown)).toMap
   }
 }

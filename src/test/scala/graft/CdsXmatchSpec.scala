@@ -33,6 +33,36 @@ class CdsXmatchSpec extends SparkSpec {
     assert(out === Map(1L -> "NearThing", 2L -> "Unknown"))
   }
 
+  test("the module is row-local: it streams and returns the batch result") {
+    import spark.implicits._
+    val alerts = (1L to 9L).map(i => (i, 10.0 * i, -5.0 * i)).toDF("candid", "ra", "dec")
+    val mock = new XmatchService {
+      def query(rows: Seq[(Long, Double, Double)], catalog: String,
+          radius: Double, cols: Seq[String]) =
+        rows.filter(_._1 % 3 != 0).flatMap(r => Seq(
+          (r._1, 0.7, Map("main_type" -> s"Far${r._1}")),
+          (r._1, 0.1, Map("main_type" -> s"Near${r._1}"))))
+    }
+    val module: graft.streaming.AlertPipeline.Module = df =>
+      CdsXmatch.xmatchCds(spark, df, mock, "simbad",
+        idCol = "candid", raCol = "ra", decCol = "dec")
+    def pairs(rs: Seq[org.apache.spark.sql.Row]) =
+      rs.map(r => r.getLong(0) -> r.getString(3)).sortBy(_._1)
+    val batch = pairs(module(alerts).collect().toSeq)
+    assert(batch === (1L to 9L).map(i => i -> (if (i % 3 == 0) "Unknown" else s"Near$i")))
+
+    val dir = java.nio.file.Files.createTempDirectory("cds-stream").toString
+    alerts.repartition(3).write.mode("overwrite").parquet(dir)
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
+    val stream = spark.readStream.schema(alerts.schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val q = graft.streaming.AlertPipeline.runOnce(stream, module,
+      (b, _) => b.collect().foreach(got.add))
+    q.awaitTermination(300000)
+    assert(q.exception.isEmpty, q.exception.toString)
+    assert(pairs(got.toArray(Array.empty[org.apache.spark.sql.Row]).toSeq) === batch)
+  }
+
   test("3hsp golden: doctest coordinate matches its source at 1.5 arcsec") {
     ReferenceFixtures.assumePresent(s"$catalogDir/3hsp.csv")
     import spark.implicits._

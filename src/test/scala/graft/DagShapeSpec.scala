@@ -11,13 +11,14 @@ import org.apache.spark.sql.graft.WithColumns
 import graft.alerts.AlertCols
 import graft.operators._
 import graft.streaming.AlertPipeline
-import graft.xmatch.CrossMatch
+import graft.xmatch.{CdsXmatch, CrossMatch, UnreachableXmatchService}
 
 /** The 18-step ZTF enrichment DAG over synthetic packets (no reference
   * fixture): pins the logical-plan shape each module adds — one
   * projection, no join — the output columns and their order, and that
   * the streaming path builds the DAG once per query and returns the
-  * batch path's rows.
+  * batch path's rows, also with the remote CDS crossmatch in place of
+  * the catalog crossmatch.
   */
 class DagShapeSpec extends SparkSpec {
 
@@ -86,9 +87,32 @@ class DagShapeSpec extends SparkSpec {
     assert(again.columns.toSeq === out.columns.toSeq)
   }
 
+  /** The DAG over three one-file micro-batches through
+    * `AlertPipeline.runOnce` (so through its row-local guard): the
+    * streamed rows, the number of batches and of DAG constructions.
+    */
+  private def streamed(dag: AlertPipeline.Module): (Seq[Row], Int, Int) = {
+    val dir = java.nio.file.Files.createTempDirectory("dag-stream").toString
+    SyntheticAlerts.frame(spark, rows.length, partitions = 3)
+      .write.mode("overwrite").parquet(dir)
+    val got = new ConcurrentLinkedQueue[Row]()
+    val batches = new AtomicInteger(0)
+    val built = new AtomicInteger(0)
+    val counted: AlertPipeline.Module = df => { built.incrementAndGet(); dag(df) }
+    val stream = spark.readStream.schema(SyntheticAlerts.schema)
+      .option("maxFilesPerTrigger", "1").parquet(dir)
+    val q = AlertPipeline.runOnce(stream, counted, (b, _) => {
+      batches.incrementAndGet()
+      b.collect().foreach(got.add)
+    })
+    q.awaitTermination(300000)
+    assert(q.exception.isEmpty, q.exception.toString)
+    (got.toArray(Array.empty[Row]).toSeq, batches.get(), built.get())
+  }
+
+  private def canon(rs: Iterable[Row]): Seq[String] = rs.map(_.toString).toSeq.sorted
+
   test("the streaming path returns the batch path's rows") {
-    def canon(rs: Iterable[Row]): Seq[String] =
-      rs.map(_.toString).toSeq.sorted
     val out = enrich(SyntheticAlerts.frame(spark, rows.length))
     val batch = canon(out.collect())
     assert(batch.length === rows.length)
@@ -96,24 +120,27 @@ class DagShapeSpec extends SparkSpec {
     assert(out.filter(col("cdsxmatch") =!= "Unknown").count() > 0)
     assert(out.filter(size(col("cstd_flux")) > 0).count() > 0)
 
-    val dir = java.nio.file.Files.createTempDirectory("dag-stream").toString
-    SyntheticAlerts.frame(spark, rows.length, partitions = 3)
-      .write.mode("overwrite").parquet(dir)
-    val got = new ConcurrentLinkedQueue[Row]()
-    val batches = new AtomicInteger(0)
-    val built = new AtomicInteger(0)
-    val counted: AlertPipeline.Module = df => { built.incrementAndGet(); enrich(df) }
-    val stream = spark.readStream.schema(SyntheticAlerts.schema)
-      .option("maxFilesPerTrigger", "1").parquet(dir)
-    // runOnce goes through streamingWriter's row-local guard
-    val q = AlertPipeline.runOnce(stream, counted, (b, _) => {
-      batches.incrementAndGet()
-      b.collect().foreach(got.add)
-    })
-    q.awaitTermination(300000)
-    assert(q.exception.isEmpty, q.exception.toString)
-    assert(batches.get() >= 3, "expected several micro-batches")
-    assert(built.get() === 1, s"the DAG was built ${built.get()} times for ${batches.get()} batches")
-    assert(canon(got.toArray(Array.empty[Row])) === batch)
+    val (got, batches, built) = streamed(enrich)
+    assert(batches >= 3, "expected several micro-batches")
+    assert(built === 1, s"the DAG was built $built times for $batches batches")
+    assert(canon(got) === batch)
+  }
+
+  test("the DAG with the remote CDS crossmatch streams and returns the batch path's rows") {
+    val cds: AlertPipeline.Module = df => CdsXmatch.xmatchCds(spark, df,
+      UnreachableXmatchService, "simbad", colsOut = Seq("cdsxmatch"))
+    val dag = AlertPipeline.pipeline(steps.map {
+      case ("xmatch", _) => cds
+      case (_, step) => step
+    }: _*)
+    val out = dag(SyntheticAlerts.frame(spark, rows.length))
+    assert(out.columns.toSeq === enrich(SyntheticAlerts.frame(spark, 1)).columns.toSeq)
+    val batch = canon(out.collect())
+    // offline service: every alert carries the Fail sentinel
+    assert(out.filter(col("cdsxmatch") === "Fail").count() === rows.length)
+
+    val (got, batches, built) = streamed(dag)
+    assert(batches >= 3 && built === 1)
+    assert(canon(got) === batch)
   }
 }

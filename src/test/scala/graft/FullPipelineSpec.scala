@@ -4,7 +4,6 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.alerts.AlertCols
 import graft.operators._
@@ -64,12 +63,7 @@ class FullPipelineSpec extends SparkSpec {
     val results = new ConcurrentLinkedQueue[Map[String, Long]]()
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(path)
-    // the CDS step joins each alert to its service matches and ranks
-    // them in a window, which AlertPipeline.streamingWriter refuses as
-    // a stream module, so the DAG runs per batch in this foreachBatch
-    val q = stream.writeStream.trigger(Trigger.AvailableNow()).foreachBatch {
-        (batch: DataFrame, _: Long) =>
-      val b = enrich(batch)
+    val q = AlertPipeline.runOnce(stream, enrich, (b, _) => {
       results.add(Map(
         "rows" -> b.count(),
         "fail_xmatch" -> b.filter(col("cdsxmatch") === "Fail").count(),
@@ -77,8 +71,7 @@ class FullPipelineSpec extends SparkSpec {
         "anomaly" -> b.filter(!isnan(col("anomaly_score"))).count(),
         "finkUnknown" -> b.filter(col("finkclass") =!= "").count(),
         "slsnGated" -> b.filter(col("superluminous_score") === -1.0).count()))
-      ()
-    }.start()
+    })
     q.awaitTermination(300000)
 
     val batches = results.toArray(Array.empty[Map[String, Long]])
