@@ -1,24 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
+    // the sidecar is written only when a run completes: remove the
+    // previous run's first, so a run that dies leaves none behind
+    // rather than a stale result a reader would take for this run's
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get("bench_out.json"))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = LocalSession.cpus
     // repetitions per query; the reported per-query time is the MEDIAN,
     // which keeps round-over-round regressions attributable (an n=1
     // sample conflates engine changes with machine-load noise)
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
     // optional comma-separated subset for local iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // same session tz as Verify.scala so bench and verify agree on
-      // timestamp semantics (events.ts NTZ→TZ cast is identity under UTC)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // warm-up: touch every table once (IO path, parquet footers, codegen
     // of the row decoders) so the first timed query isn't charged for it
     Tables.names.foreach { n =>

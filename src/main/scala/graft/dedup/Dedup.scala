@@ -518,7 +518,7 @@ object Dedup {
   }
 
   /** SAMPLED worst-cell pre-flight (r17 — the embedding twin of
-    * [[sampledRefuseIfViral]], motivated by `tools/EmbSampledScale`
+    * [[sampledRefuseIfViral]], motivated by the SCALE_r17 §3 rate sweep
     * at the 1000x decade: the exact census pays the FULL corpus's
     * IVF assignment before it can refuse — 438 s at sf100, MORE than
     * the rateInv=2 relief answer costs, 273 s). This stage assigns
@@ -533,10 +533,10 @@ object Dedup {
     * the exact gate; anything under falls through to the exact
     * census, which runs on the assignment the verification join
     * reads anyway. Net effect: a clearly-viral corpus (the planted
-    * ViralStress shape, estimates orders over the bound) refuses in
-    * ~assignment/r seconds; a borderline corpus (natural sf100 at
-    * 1.6x bound) pays one small probe extra and keeps the exact
-    * answer as the gate of record.
+    * viral-density shape of SCALE_r14 Finding 2, estimates orders over
+    * the bound) refuses in ~assignment/r seconds; a borderline corpus
+    * (natural sf100 at 1.6x bound) pays one small probe extra and
+    * keeps the exact answer as the gate of record.
     */
   private[graft] def sampledRefuseIfViralCells(df: DataFrame,
       idCol: String, vecCol: String, ncells: Int, bound: Long,
@@ -1339,7 +1339,7 @@ object Dedup {
         src = null; dst = null // the union-find no longer needs the edges
         // the label table leaves the driver as a BROADCAST of the two
         // primitive arrays read per-partition by index — r14's gate
-        // headroom probe (tools/GateHeadroom) showed the former boxed
+        // headroom probe (SCALE_r14 Finding 3) showed the former boxed
         // Array[(Long, Long)] + LocalRelation conversion OOMing the 8 g
         // default heap at the 2^24 boundary under the worst-case node
         // count (2 nodes/edge): ~1.9 GB of tuple boxing plus a second
@@ -1590,7 +1590,7 @@ object Dedup {
     * returns (member ids, verified(i,j)) — size-compat pre-check +
     * exact sorted-merge Jaccard. ONE definition feeds both the live
     * kernel and the retained naive kernel, so the comparison the
-    * equivalence spec and the `ABBench foreststars` measurement rest
+    * equivalence spec and the SCALE_r16 §2 foreststars measurement rest
     * on cannot silently diverge.
     */
   private def lshState(it: Iterator[(Long, Long, Int, Array[Long])],
@@ -1675,7 +1675,7 @@ object Dedup {
 
   /** The pre-r16 all-pairs lazy-verified union-find kernel — retained
     * for the equivalence spec and the paired A/B measurement
-    * (`tools/ABBench foreststars`); not wired into any operator.
+    * (SCALE_r16 §2, foreststars); not wired into any operator.
     */
   private[graft] def lshBucketStarsNaive(
       it: Iterator[(Long, Long, Int, Array[Long])],
@@ -1857,8 +1857,8 @@ object Dedup {
     * degrees — and per-cell occupancy is the exact run's ~4096 target
     * divided by rateInv.
     *
-    * History of the contract (r16, `tools/D23Fidelity` +
-    * `tools/D23Boundary`, SCALE_r16 §3): the operator originally
+    * History of the contract (r16, the fidelity and boundary
+    * probes of SCALE_r16 §2b): the operator originally
     * re-derived the IVF on the sub-corpus and carried a documented
     * "borderline cross-cell pairs thin unpredictably" caveat. The
     * first fidelity pass read recall 1.0000 at every scale and

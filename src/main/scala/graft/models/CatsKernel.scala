@@ -29,11 +29,12 @@ trait CatsKernel extends Serializable {
 object CatsKernel {
 
   /** Runtime-selected kernel. MEASURED NULL RESULT (r9,
-    * tools/GemmBench on the model's two hot shapes): the explicit
-    * Vector-API kernel lands at 0.86-1.02x of Scalar — C2's superword
-    * pass already auto-vectorizes the scalar k-loop (~7.3 GMAC/s, up
-    * from the 5.3 the r7 AxpyBench measured on the narrower tile),
-    * and the bit-stability contract forbids the fused add(mul)->fma
+    * SCALE_r09 "Flags and honesty notes", on the model's two hot
+    * shapes): the explicit Vector-API kernel lands at 0.86-1.02x of
+    * Scalar — C2's superword pass already auto-vectorizes the scalar
+    * k-loop (~7.3 GMAC/s, up from the 5.3 the r6 axpy microbench
+    * measured on the narrower tile, SCALE_r06 "q17 batched CNN
+    * forward"), and the bit-stability contract forbids the fused add(mul)->fma
     * rewrite where the remaining explicit-SIMD headroom lives. So
     * Scalar stays the default; `-Dgraft.cats.kernel=vector` opts in
     * to [[CatsVectorKernel]] (bit-identical by contract and by
@@ -59,9 +60,9 @@ object CatsKernel {
     * OUTERMOST, so each weight row streams from L2 once per 4 batch
     * rows while the 4 output rows stay L1-resident across the j loop.
     * Measured at the JVM's superword ceiling (~5.3 GMAC/s L2-resident,
-    * tools/AxpyBench); the batch win over per-row is ~1.15x and the
-    * order-of-magnitude step needs the vector API — which is exactly
-    * what this seam is for.
+    * SCALE_r06 "q17 batched CNN forward"); the batch win over per-row
+    * is ~1.15x and the order-of-magnitude step needs the vector API —
+    * which is exactly what this seam is for.
     */
   object Scalar extends CatsKernel {
     def gemmAcc(x: Array[Array[Double]], w: Array[Array[Double]],

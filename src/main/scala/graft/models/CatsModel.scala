@@ -181,11 +181,11 @@ final class CatsModel(w: Map[String, Tensor],
     * tiles), matching the reference's Arrow-batch scoring granularity
     * (rubin/cats/processor.py:60-169).
     *
-    * Measured honestly (tools/CatsProfile, local box): the per-row
-    * pass runs at ~4-5 GMAC/s, which is ALREADY the JVM's measured
-    * single-stream axpy ceiling for L2-resident weights (an isolated
-    * `g(k) += x*w(k)` microbench tops out at 5.3 GMAC/s from L2,
-    * 9.6 GMAC/s from L1 — tools/AxpyBench), so weight-reuse tiling
+    * Measured honestly (SCALE_r06 "q17 batched CNN forward", local
+    * box): the per-row pass runs at ~4-5 GMAC/s, which is ALREADY the
+    * JVM's measured single-stream axpy ceiling for L2-resident weights
+    * (an isolated `g(k) += x*w(k)` microbench tops out at 5.3 GMAC/s from L2,
+    * 9.6 GMAC/s from L1 — same section), so weight-reuse tiling
     * buys ~1.15x here, not TF's order-of-magnitude batch win; without
     * explicit SIMD (jdk.incubator.vector) or float32 (which would
     * break the 1e-9 golden pins) the scalar/superword ceiling is the

@@ -13,9 +13,10 @@ import jdk.incubator.vector.DoubleVector
   *
   * Loading this object requires the incubator module on the runtime
   * (`--add-modules jdk.incubator.vector` — build.sbt adds it to every
-  * forked run). MEASURED (r9 GemmBench): 0.86-1.02x of Scalar on the
-  * hot shapes — C2's superword pass already vectorizes the scalar
-  * loop and the no-FMA contract caps the explicit-SIMD headroom — so
+  * forked run). MEASURED (SCALE_r09 "Flags and honesty notes"):
+  * 0.86-1.02x of Scalar on the hot shapes — C2's superword pass
+  * already vectorizes the scalar loop and the no-FMA contract caps the
+  * explicit-SIMD headroom — so
   * this kernel is OPT-IN (`-Dgraft.cats.kernel=vector`), kept as the
   * seam's proof-of-concept and the place an FMA-relaxed variant would
   * land if the goldens were ever re-pinned; [[CatsKernel.default]]

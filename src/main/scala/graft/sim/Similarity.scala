@@ -351,9 +351,9 @@ object Similarity {
     // thinned corpus kept only ~ncells/r seed rows, so the "re-derived
     // IVF" the d23 caveat worried about was really a ~1-cell index —
     // per-cell occupancy r× the 4096 target and a quadratic
-    // within-cell join (found by the D23Boundary probe: recall 1.0 at
-    // every severity was the index not cutting at all). An id-shifted
-    // frame was worse still: ZERO seed rows and a silently empty
+    // within-cell join (found by the SCALE_r16 §2b boundary probe:
+    // recall 1.0 at every severity was the index not cutting at all).
+    // An id-shifted frame was worse still: ZERO seed rows and a silently empty
     // result.
     //
     // `seedFrom` (default: the frame itself) lets a SAMPLED caller
@@ -697,7 +697,7 @@ object Similarity {
     * 13 MB sf1 corpus, under [[parallelized]]'s 16 MB byte floor, the
     * whole bucket + candidate join + cosine pipeline serialized on ONE
     * scan split and s6 ran 1.6x SLOWER than the join arm, probed
-    * single-session in tools/SrpProbe). The former aggregate exchanged
+    * single-session, OPTIMIZATION_r17 §5). The former aggregate exchanged
     * the corpus unconditionally, so an explicit-width repartition can
     * never cost more than the old shape — and explicit widths are
     * exempt from AQE's byte-based coalescing, which cannot see

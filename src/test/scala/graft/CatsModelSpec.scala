@@ -119,10 +119,10 @@ class CatsModelSpec extends AnyFunSuite {
   }
 
   test("vector kernel loads under test and is BIT-identical to scalar on fuzzed shapes") {
-    // Scalar is the measured default (GemmBench null result — see
-    // CatsKernel.default); the vector kernel must still LOAD here
-    // (build.sbt adds the incubator module to forked runs) so the
-    // opt-in path stays exercised, and must be raw-bits identical
+    // Scalar is the measured default (the SCALE_r09 vector-kernel null
+    // result — see CatsKernel.default); the vector kernel must still
+    // LOAD here (build.sbt adds the incubator module to forked runs) so
+    // the opt-in path stays exercised, and must be raw-bits identical
     assert(graft.models.CatsKernel.default eq graft.models.CatsKernel.Scalar,
       "default drifted from the measured-scalar decision")
     val lcg = new Lcg(7L)

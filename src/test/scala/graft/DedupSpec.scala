@@ -614,8 +614,8 @@ class DedupSpec extends SparkSpec {
     // agreement. This is what makes 1/r^2 survival exactly true per
     // exact-visible pair (the text-family rigor). Borderline-heavy
     // corpus on purpose: threshold at the cosine bulk, like the
-    // D23Boundary probe that measured 0.41 recall under the old
-    // re-derived index.
+    // SCALE_r16 §2b boundary probe that measured 0.41 recall under the
+    // old re-derived index.
     import spark.implicits._
     val rnd = new scala.util.Random(2323)
     val dim = 8

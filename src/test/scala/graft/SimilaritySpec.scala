@@ -160,7 +160,7 @@ class SimilaritySpec extends SparkSpec {
     // Found by review after the NearestCell rewrite: squared distance
     // is mathematically >= 0, but the Vec.sqDist fold can evaluate a
     // near-identical pair a few ulp NEGATIVE — beating the exact-zero
-    // self distance. tools/DegenerateSeedSearch found three
+    // self distance. A seed search (SCALE_r17 §8) found three
     // ulp-perturbations of one vector with d01 < 0, d02 < d01,
     // d12 > d02: under the pre-fix tag rule every one of the three
     // tagged AWAY from super 1 (c1->0 via the negative, c0 and c2 ->
