@@ -200,9 +200,7 @@ object Dedup {
     }
     starts(ntoks) = bytes.length + 1
     val nsh = ntoks - n + 1
-    // open addressing, power-of-two capacity >= 2 * nsh
-    var cap = 4
-    while (cap < (nsh << 1)) cap <<= 1
+    val cap = shingleTableCapacity(nsh)
     val mask = cap - 1
     val slotHash = new Array[Long](cap)
     val slotIdx = new Array[Int](cap) // shingle index + 1; 0 = empty
@@ -241,6 +239,26 @@ object Dedup {
       else java.util.Arrays.copyOf(out, nout)
     java.util.Arrays.sort(res)
     res
+  }
+
+  /** Largest probe table [[hashedShinglesKernel]] builds: the biggest
+    * power of two a JVM array can hold. */
+  private final val MaxShingleTable = 1 << 30
+
+  /** Open-addressing capacity for `nsh` shingles: the smallest power of
+    * two >= 2 * `nsh`, at least 4. The bound is taken in Long: in Int,
+    * `nsh << 1` goes negative from 2^30 shingles (a 4-slot table the
+    * probe loop then spins on forever) and doubling past 2^30 wraps
+    * `cap` to 0 (an endless loop). Above the largest table this throws.
+    */
+  private[graft] def shingleTableCapacity(nsh: Int): Int = {
+    val need = 2L * nsh
+    if (need > MaxShingleTable) throw new IllegalArgumentException(
+      s"shingle table overflow: $nsh shingles need more than " +
+        s"$MaxShingleTable slots")
+    var cap = 4
+    while (cap < need) cap <<= 1
+    cap
   }
 
   /** Distinct hashed token n-gram shingles, ASCENDING-SORTED (compiled
@@ -852,12 +870,12 @@ object Dedup {
     * arriving within one micro-batch buffers its bucket whole in one
     * task (memory ~ family x shingle-array size). That is the
     * documented bound, not a to-do: no streaming pair-report consumer
-    * exists in this engine (the streaming chains consume CLOSURES via
-    * [[graft.streaming.EventTimeChain]], whose state is per-key
-    * bounded), and building skew routing for a consumer that does not
-    * exist would be speculative. Revisit only if a streaming
-    * pair-report consumer appears; batch callers are unaffected (the
-    * census caps buckets).
+    * exists in this engine (the broker's stream path,
+    * [[graft.streaming.AlertPipeline]], refuses stateful operators),
+    * and building skew routing for a consumer that does not exist
+    * would be speculative. Revisit only if a streaming pair-report
+    * consumer appears; batch callers are unaffected (the census caps
+    * buckets).
     */
   def minhashLshPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, numHashes: Int = 12, rowsPerBand: Int = 3,

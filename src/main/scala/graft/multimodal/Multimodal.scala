@@ -61,9 +61,9 @@ object Multimodal {
     * deterministic, codec-free, oracle-checkable). 60 bits on purpose:
     * the output column is named `simhash` and feeds the EXISTING
     * Hamming-LSH machinery — [[graft.dedup.Dedup.simhashPairs]] (d5),
-    * `simhashAssign` (d8), the streaming near-dup assigner — unchanged,
-    * so image near-dup at 100 TB rides the same banded, never-all-pairs
-    * path as text. Partition-local, no shuffle.
+    * `simhashAssign` (d8) — unchanged, so image near-dup at 100 TB
+    * rides the same banded, never-all-pairs path as text.
+    * Partition-local, no shuffle.
     */
   def perceptualHash(spark: SparkSession, media: DataFrame): DataFrame = {
     import spark.implicits._

@@ -473,16 +473,14 @@ object PipelineQueries extends QueryPack {
       .select(col("id").as("doc_id"), col("w"), col("skey"))
       .orderBy(col("skey").desc, col("doc_id").asc)
 
-  // p5: the event-time corpus ingest's BATCH twin on the driver board
-  // — quality filter, whitespace-normalized md5 fingerprint, simhash,
-  // and the smallest (event time, doc_id) copy per distinct content:
-  // the admission set the watermarked stream reproduces byte-identically
-  // under any bounded-disorder replay (StreamingOpsSpec/FuzzSpec pin
-  // stream==batch; this query pins the batch twin against DuckDB).
-  // Event time is synthesized deterministically from doc_id
+  // p5: event-time corpus admission — quality filter, whitespace-
+  // normalized md5 fingerprint, simhash, and the smallest
+  // (event time, doc_id) copy per distinct content. The DuckDB oracle
+  // pins the rows; CorpusBuildSpec pins the tie-breaks on a hand-built
+  // corpus. Event time is synthesized deterministically from doc_id
   // (minute-grained over a day) since documents carries no timestamp.
   private def p5EventIngest(s: SparkSession, dir: String): DataFrame =
-    graft.streaming.StreamingOps.streamingCorpusIngestEventTimeBatch(
+    graft.text.CorpusBuild.earliestAdmissions(
       docs(s, dir).withColumn("ts",
         timestamp_millis(lit(1700000000000L) + (col("doc_id") % 1440) * 60000L)),
       "doc_id", "text", "ts", requireTerminal = false)

@@ -139,14 +139,6 @@ object Similarity {
   private[graft] def clearIdStatsCache(): Unit =
     idStatsCache.synchronized { idStatsCache.clear() }
 
-  /** Drop cached centroid tables (see [[centroidCache]]) — cold-run
-    * hygiene for the measurement tools: with the cache warm, a later
-    * construction on the same seed frame skips the one collect job
-    * the cold path pays.
-    */
-  private[graft] def clearCentroidCache(): Unit =
-    centroidCache.synchronized { centroidCache.clear() }
-
   /** `(count, min id, max id)` of `df`'s id column — cached per
     * canonicalized plan (see [[idStatsCache]]). The aggregate runs on
     * the column's NATURAL type (an eager `cast("long")` would throw

@@ -96,4 +96,30 @@ object CorpusBuild {
     free(reps, 1)
     ShardPack.pack(clean, idCol, textCol, groupCol, budgetTokens)
   }
+
+  /** Event-time admission front of the chain (p5): the quality cascade,
+    * a whitespace-normalized md5 fingerprint and a simhash per kept
+    * doc, then the EARLIEST copy of each distinct content — the
+    * smallest (event time, doc id) per fingerprint, one struct-min hash
+    * aggregate with no window sort and no join. The admitted rows carry
+    * their simhash, so near-dup assignment can chain behind as a batch
+    * stage ([[Dedup.simhashAssign]]).
+    *
+    * Returns (doc_id: long, fp, ts_ms: epoch millis of `tsCol`, simhash).
+    */
+  def earliestAdmissions(docs: DataFrame, idCol: String, textCol: String,
+      tsCol: String, requireTerminal: Boolean = true): DataFrame = {
+    val (keep, _) = TextOps.qualityFilter(col(textCol),
+      requireTerminal = requireTerminal)
+    Dedup.simhash(docs.filter(keep), idCol, textCol,
+        carryCols = Seq(textCol, tsCol))
+      .select(col(idCol).cast("long").as("doc_id"),
+        TextOps.fingerprint(col(textCol)).as("fp"),
+        unix_millis(col(tsCol).cast("timestamp")).as("ts_ms"),
+        col("simhash"))
+      .groupBy(col("fp"))
+      .agg(min(struct(col("ts_ms"), col("doc_id"), col("simhash"))).as("m"))
+      .select(col("m.doc_id").as("doc_id"), col("fp"),
+        col("m.ts_ms").as("ts_ms"), col("m.simhash").as("simhash"))
+  }
 }

@@ -106,7 +106,7 @@ object Decontaminate {
     report(base.filter(!col("is_bench")).select(col("doc_id")), matched)
   }
 
-  /** The shared output tail (also the streaming module's): restore
+  /** The shared output tail of [[flags]] and [[flagsBloomPruned]]: restore
     * zero-match docs via a left join so the report is total — 1:1 with
     * `corpusIds` (a single-column doc_id relation). */
   private[graft] def report(corpusIds: DataFrame, matched: DataFrame): DataFrame =

@@ -59,6 +59,34 @@ class CorpusBuildSpec extends SparkSpec {
     assert(re.filter(col("shard") =!= col("expect")).count() === 0L)
   }
 
+  test("earliestAdmissions: earliest copy per fingerprint, ts ties to the smaller doc_id, rejects never admitted") {
+    val s = spark
+    import s.implicits._
+    val fox = "the quick brown fox jumps over lazy dogs"
+    val owl = "an old grey owl watched seven quiet fields"
+    val elk = "seventeen travelling merchants carried woollen blankets across mountains"
+    val elkSpaced = "  seventeen travelling  merchants carried woollen blankets across mountains "
+    val docs = Seq(
+      (1L, "too short", 0L),                  // quality-rejected, yet earliest
+      (2L, fox, 200L), (7L, fox, 100L),       // smaller ts beats smaller id
+      (4L, owl, 300L), (9L, owl, 300L),       // ts tie: smaller doc_id
+      (11L, elkSpaced, 400L), (12L, elk, 500L) // whitespace variants
+    ).toDF("doc_id", "text", "t").withColumn("ts", timestamp_millis(col("t")))
+    val (keep, _) = TextOps.qualityFilter(col("text"), requireTerminal = false)
+    assert(docs.filter(!keep).select("doc_id").as[Long].collect().toSeq === Seq(1L))
+
+    val out = CorpusBuild.earliestAdmissions(docs, "doc_id", "text", "ts",
+      requireTerminal = false)
+    assert(out.columns.toSeq === Seq("doc_id", "fp", "ts_ms", "simhash"))
+    def md5(t: String): String = java.security.MessageDigest.getInstance("MD5")
+      .digest(t.getBytes("UTF-8")).map("%02x".format(_)).mkString
+    val got = out.as[(Long, String, Long, Long)].collect().toSet
+    assert(got === Set(
+      (7L, md5(fox), 100L, Dedup.simhashKernel(fox)),
+      (4L, md5(owl), 300L, Dedup.simhashKernel(owl)),
+      (11L, md5(elk), 400L, Dedup.simhashKernel(elkSpaced))))
+  }
+
   test("stage-materialized builds (Local and Table) return the lazy rows") {
     import graft.dedup.SweepCheckpoint
     def run(m: SweepCheckpoint): Set[(Long, String, Long, Long)] =

@@ -49,6 +49,18 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("shingle table capacity: power of two >= 2 * shingles; named failure past 2^30 slots") {
+    assert(Seq(0, 1, 2, 3, 4, 5).map(Dedup.shingleTableCapacity) ===
+      Seq(4, 4, 4, 8, 8, 16))
+    assert(Dedup.shingleTableCapacity(1 << 29) === (1 << 30))
+    // past the largest table: a named failure, not an Int wrap of the
+    // bound (a 4-slot table) or of the capacity (0) that never returns
+    for (nsh <- Seq((1 << 29) + 1, 1 << 30, Int.MaxValue)) {
+      val e = intercept[IllegalArgumentException](Dedup.shingleTableCapacity(nsh))
+      assert(e.getMessage.contains("shingle table overflow"), e.getMessage)
+    }
+  }
+
   test("simhash assignment is sound against the exact pair enumeration") {
     import org.apache.spark.sql.functions.col
     val docs = Tables.t(spark, sf, "documents")
