@@ -35,6 +35,51 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * the optimizer estimate when the plan carries selective filters.
   */
 object ScanBytes {
+
+  /** Spread floor of the one-shot per-document kernels (text
+    * tokenize/regex/fingerprint, the dedup shingle and simhash
+    * front-ends). Measured: the exchange pays at the 50k-doc scale
+    * (6.0 MB on disk) and hurts at the oracle scales (<= 0.6 MB), so
+    * 2 MB is the geometric midpoint with ~3x margin to both sides.
+    */
+  val KernelFloor: Long = 1L << 21
+
+  /** Spread floor of the iterative vector operators (IVF cell
+    * assignment, Lloyd loops, PQ scoring). Measured: an ungated
+    * repartition cost them +0.6..1.7 s per query at the oracle scales,
+    * where the corpus fits one task anyway; the embeddings table is
+    * ~8 MB at the 20k-vector scale where the exchange is a wash and
+    * ~80 MB at the 200k-vector scale where it pays 8x (23.6 s -> ~3 s
+    * for the sf10 cell-assignment pass), so 16 MB keeps margin on both
+    * sides.
+    */
+  val VectorFloor: Long = 1L << 24
+
+  /** Repartition `df` up to the session's parallelism before CPU-bound
+    * per-row work when its source under-parallelizes it: a single small
+    * parquet file arrives as 1-2 splits (one row group is one task), so
+    * every downstream kernel would serialize on as many cores. No-op,
+    * and no shuffle, on a streaming frame (micro-batches size
+    * themselves), when `df` already carries enough partitions (the
+    * corpus-scale case, where a blind repartition would shuffle the
+    * whole text column), or when `sizedBy`'s scan bytes are below
+    * `floorBytes` (a corpus that small runs cheaper in one task than
+    * through an exchange plus the per-stage task overhead the extra
+    * partitions add downstream). `sizedBy` is the frame whose size
+    * decides: pass the pre-explode base when `df` contains a Generate,
+    * whose size is not scan-derived. A floor of 0 skips the size check.
+    */
+  def spread(df: DataFrame, floorBytes: Long,
+      sizedBy: DataFrame = null): DataFrame = {
+    if (df.isStreaming) return df
+    val sizing = if (sizedBy == null) df else sizedBy
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    if ((floorBytes <= 0 || of(sizing) >= floorBytes) &&
+        df.rdd.getNumPartitions < target)
+      df.repartition(target)
+    else df
+  }
+
   def of(df: DataFrame): Long = {
     val leaves = df.queryExecution.optimizedPlan.collectLeaves()
     val total = leaves.map {

@@ -21,6 +21,14 @@ import org.apache.spark.sql.types.{ArrayType, StructType}
   */
 object AlertCols {
 
+  /** A light-curve array as a UDF receives it, decoded to primitive
+    * doubles: a null element (an upper limit or non-detection) becomes
+    * NaN, and a null array an empty one.
+    */
+  def doubles(xs: scala.collection.Seq[java.lang.Double]): Array[Double] =
+    if (xs == null) Array.emptyDoubleArray
+    else xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
+
   /** ZTF packet layout. */
   val ZtfCurrent = "candidate"
   val ZtfHistory = "prv_candidates"

@@ -3,6 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ScanBytes
 import graft.functions.Hashing.hash60
 import graft.text.TextOps
 
@@ -621,8 +622,9 @@ object Dedup {
     val k = udf((t: String) =>
       hashedShinglesKernel(if (t == null) "" else t, n))
       .asNondeterministic() // see signedSets: keeps the kernel above the
-    // parallelized() exchange
-    parallelized(df.select(col(idCol).as("id"), col(textCol).as("__t")))
+    // spread() exchange
+    ScanBytes.spread(df.select(col(idCol).as("id"), col(textCol).as("__t")),
+        ScanBytes.KernelFloor)
       .select(col("id"), k(col("__t")).as("sh"))
       .filter(size(col("sh")) > 0)
       .select(col("id"), col("sh"), size(col("sh")).as("nsh"))
@@ -653,7 +655,7 @@ object Dedup {
 
   /** d2's engine over a pre-built (id, sh: sorted array<long>, nsh)
     * relation — shared with [[nearDupPairs]], where `sets` derives from
-    * one [[shingleSets]] materialization instead of a private cache.
+    * one [[signedSets]] materialization instead of a private cache.
     */
   private def ngramJaccardCore(sets: DataFrame, threshold: Double,
       guard: Boolean = false,
@@ -845,12 +847,6 @@ object Dedup {
     v >>> 4
   }
 
-  /** Signature column over a shingle-set column. */
-  def minhashSignature(sh: Column, numHashes: Int): Column = {
-    val k = udf((s: Seq[String]) => minhashSignatureKernel(s, numHashes))
-    k(sh)
-  }
-
   /** MinHash + LSH near-dup pairs, verified with exact Jaccard.
     *
     * numHashes = bands * rowsPerBand. A pair collides if any band of the
@@ -886,8 +882,8 @@ object Dedup {
   /** The FUSED minhash base relation: (id, nsh, shd: sorted
     * array<long>, sig: minhash signature), cached — one compiled
     * kernel tokenizes, fingerprints, and signs each text in a single
-    * pass. The former [[shingleSets]] + [[minhashSignature]] chain
-    * round-tripped the string shingle array through Tungsten twice
+    * pass. A two-UDF chain (string shingles, then signatures) would
+    * round-trip the string shingle array through Tungsten twice
     * (write it out of the shingle UDF, read it back into the signature
     * UDF — UTF8String conversion per element each way); here the
     * strings never leave the JVM kernel, which is the dominant cost of
@@ -906,10 +902,11 @@ object Dedup {
       java.util.Arrays.sort(shd)
       (sh.length, shd, minhashSignatureKernel(sh, numHashes))
     }).asNondeterministic() // values ARE deterministic; the marker stops
-    // Catalyst pushing this CPU-bound project below the parallelized()
+    // Catalyst pushing this CPU-bound project below the spread()
     // exchange back onto the (few) input splits — measured 6.2 s -> 0.8 s
     // on the 50k-doc stress table (kernel on 1 thread vs 32)
-    parallelized(df.select(col(idCol).as("id"), col(textCol).as("__t")))
+    ScanBytes.spread(df.select(col(idCol).as("id"), col(textCol).as("__t")),
+        ScanBytes.KernelFloor)
       .select(col("id"), k(col("__t")).as("k"))
       .filter(col("k._1") > 0)
       .select(col("id"), col("k._1").as("nsh"), col("k._2").as("shd"),
@@ -917,57 +914,7 @@ object Dedup {
       .cache()
   }
 
-  /** Repartition a narrow (id, text) input up to the cluster's
-    * parallelism when the source plan under-parallelizes the CPU-bound
-    * per-doc kernels — a single small parquet file yields 1-2 input
-    * splits, which serializes the MD5 minhash front-end on one core
-    * (measured 9.1 s -> 4.3 s at the 50k-doc stress scale). No-op, and
-    * no shuffle, when the scan already carries enough splits — the
-    * corpus-scale case, where a blind repartition would be a full
-    * shuffle of the text column — AND below a 2 MB floor (ADVICE
-    * r12): on a corpus that small the serial kernel pass is cheaper
-    * than the exchange plus the per-stage task overhead the extra
-    * partitions add to every downstream stage. The floor is
-    * denominated in ACTUAL scan bytes ([[graft.ScanBytes]], VERDICT
-    * r13 #2) — measured: the oracle scales where the exchange hurt
-    * are <= 0.6 MB on disk, the 50k-doc scale where it pays is
-    * 6.0 MB, so 2 MB is the geometric midpoint with ~3x margin to
-    * both sides.
-    */
-  private def parallelized(df: DataFrame): DataFrame = {
-    if (df.isStreaming) return df // micro-batches size themselves
-    val bytes = graft.ScanBytes.of(df)
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (bytes >= (1L << 21) && df.rdd.getNumPartitions < target)
-      df.repartition(target)
-    else df
-  }
-
-  /** The shared near-dup base relation: (id, sh: array<string>,
-    * shd: sorted array<long>, nsh), cached. String shingles drive the
-    * minhash signatures (the oracle-mirrored MD5 family hashes shingle
-    * TEXT); the sorted 64-bit fingerprints drive both operators'
-    * merge-kernel verification. At corpus scale this is the
-    * persisted/checkpointed table both d2 and d3 read.
-    */
-  def shingleSets(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3): DataFrame = {
-    val shingleK = udf((t: String) =>
-      shinglesKernel(if (t == null) "" else t, n)).asNondeterministic()
-    val sortedHashes = udf((sh: Seq[String]) => {
-      val h = sh.map(fnv1a64).toArray
-      java.util.Arrays.sort(h)
-      h
-    })
-    parallelized(df.select(col(idCol).as("id"), col(textCol).as("__t")))
-      .select(col("id"), shingleK(col("__t")).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"), col("sh"), sortedHashes(col("sh")).as("shd"),
-        size(col("sh")).as("nsh"))
-      .cache()
-  }
-
-  /** Both near-dup operators off ONE [[shingleSets]] materialization
+  /** Both near-dup operators off ONE [[signedSets]] materialization
     * (VERDICT r4 #10): the shingle build + hash + cache runs once and
     * feeds d2's prefix-filtered join and d3's banded join. Standalone
     * entry points keep their own leaner materializations (d2 never
@@ -986,9 +933,7 @@ object Dedup {
     (d2, d3)
   }
 
-  /** d3's engine over a pre-built [[signedSets]] relation (a legacy
-    * [[shingleSets]] relation also works: when no `sig` column is
-    * present, signatures are computed from the string shingles).
+  /** d3's engine over a pre-built [[signedSets]] relation.
     *
     * r14 plan (SCALE_r14: the r13-shaped candidate join re-joined the
     * sets table TWICE to fetch shingle payloads, shuffling two ~350 B
@@ -1024,9 +969,6 @@ object Dedup {
     val spark = sets.sparkSession
     import spark.implicits._
     val bandsN = numHashes / rowsPerBand
-    val sigs =
-      if (sets.columns.contains("sig")) sets
-      else sets.withColumn("sig", minhashSignature(col("sh"), numHashes))
     val bandKeys = (0 until bandsN).map { b =>
       xxhash64((lit(b) +: (0 until rowsPerBand).map(r =>
         col("sig")(b * rowsPerBand + r))): _*)
@@ -1039,10 +981,10 @@ object Dedup {
     // loudly on a non-integral id column rather than let the cast
     // null out and surface as a cryptic encoder error
     require(Seq("long", "int", "short", "byte", "integer")
-        .contains(sigs.schema("id").dataType.typeName),
+        .contains(sets.schema("id").dataType.typeName),
       s"minhashLshPairsFromSets requires an integral id column; got " +
-        sigs.schema("id").dataType.typeName)
-    val banded = sigs
+        sets.schema("id").dataType.typeName)
+    val banded = sets
       .select(col("id").cast("long").as("id"), col("nsh"), col("shd"),
         col("sig"), explode(array(bandStructs: _*)).as("bb"))
       .select(col("bb.bkey").as("bkey"), col("bb.band").as("band"),
@@ -1075,7 +1017,7 @@ object Dedup {
       (bucketCap != DefaultBucketCap || pairGuard(sets))
     val bigKeys: Array[Long] =
       if (!censusNeeded) Array.empty
-      else sigs
+      else sets
         .select(explode(array(bandKeys: _*)).as("bkey"))
         .groupBy(col("bkey")).agg(count(lit(1)).as("__bsz"))
         .filter(col("__bsz") > bucketCap)
@@ -1483,7 +1425,7 @@ object Dedup {
   }
 
   /** Per-bucket star forest over the LSH band buckets of a
-    * [[signedSets]] (or legacy [[shingleSets]]) relation — the
+    * [[signedSets]] relation — the
     * [[minhashLshClusterSummary]] engine: distinct `(d1, d2)`
     * connectivity edges. The bucket key is the xxhash64 of the exact
     * band signature triple — a 64-bit collision can only MERGE two
@@ -1491,14 +1433,8 @@ object Dedup {
     * before any union, so a merge cannot create a false edge (odds
     * ~buckets²/2^64; a collision admits extra true near-dup pairs the
     * band test alone would have missed, never spurious ones).
-    */
-  private[graft] def minhashForestFromSets(sets: DataFrame,
-      threshold: Double, numHashes: Int, rowsPerBand: Int,
-      bucketCap: Int = 1 << 16): DataFrame =
-    minhashForestParts(sets, threshold, numHashes, rowsPerBand,
-      bucketCap)._1
-
-  /** [[minhashForestFromSets]] plus the count of oversized buckets, so
+    *
+    * Returns the forest and the count of oversized buckets, so
     * eager callers ([[minhashLshClusterSummary]]) can log how many
     * were routed to the join path.
     *
@@ -1524,18 +1460,15 @@ object Dedup {
     val spark = sets.sparkSession
     import spark.implicits._
     val bandsN = numHashes / rowsPerBand
-    val sigs =
-      if (sets.columns.contains("sig")) sets
-      else sets.withColumn("sig", minhashSignature(col("sh"), numHashes))
     val bandKeys = (0 until bandsN).map { b =>
       xxhash64((lit(b) +: (0 until rowsPerBand).map(r =>
         col("sig")(b * rowsPerBand + r))): _*)
     }
-    val banded = sigs
+    val banded = sets
       .select(col("id").cast("long").as("id"), col("nsh"), col("shd"),
         explode(array(bandKeys: _*)).as("bkey"))
       .select(col("bkey"), col("id"), col("nsh"), col("shd"))
-    val bigKeys: Array[Long] = sigs
+    val bigKeys: Array[Long] = sets
       .select(explode(array(bandKeys: _*)).as("bkey"))
       .groupBy(col("bkey")).agg(count(lit(1)).as("__bsz"))
       .filter(col("__bsz") > bucketCap)
@@ -1567,7 +1500,7 @@ object Dedup {
     (forest, bigKeys.length.toLong)
   }
 
-  /** Per-bucket kernel of [[minhashForestFromSets]]: incremental
+  /** Per-bucket kernel of [[minhashForestParts]]: incremental
     * component-aware verification — each member is checked against the
     * existing components' members (until it connects to each), then one
     * star per nontrivial component rooted at its min member id.
@@ -1978,12 +1911,12 @@ object Dedup {
   def simhash(df: DataFrame, idCol: String, textCol: String,
       carryCols: Seq[String] = Nil): DataFrame = {
     val k0 = udf((t: String) => simhashKernel(t))
-    // batch: nondeterministic marker + parallelized() keep the kernel on
+    // batch: nondeterministic marker + spread() keep the kernel on
     // the full thread pool (see signedSets); streaming callers keep the
     // plain deterministic project (stateful-op analysis forbids the rest)
     val k = if (df.isStreaming) k0 else k0.asNondeterministic()
-    parallelized(df.select((col(idCol) +: carryCols.map(col)) :+
-        col(textCol).as("__t"): _*))
+    ScanBytes.spread(df.select((col(idCol) +: carryCols.map(col)) :+
+        col(textCol).as("__t"): _*), ScanBytes.KernelFloor)
       .select((col(idCol) +: carryCols.map(col)) :+
         k(col("__t")).as("simhash"): _*)
   }
@@ -2362,42 +2295,18 @@ object Dedup {
     */
   def incrementalDedup(inc: DataFrame, idCol: String, textCol: String,
       baseExact: DataFrame, baseBands: DataFrame,
-      maxHamming: Int): DataFrame =
-    incrementalDedupImpl(inc, idCol, textCol, baseExact, baseBands,
-      maxHamming,
-      windowMin = !inc.isStreaming &&
-        graft.ScanBytes.of(inc) >= (1L << 24))
-
-  /** [[incrementalDedup]] with the within-increment-minimum arm
-    * switchable, so the equivalence spec can drive both on one frame.
-    */
-  private[graft] def incrementalDedupImpl(inc: DataFrame, idCol: String,
-      textCol: String, baseExact: DataFrame, baseBands: DataFrame,
-      maxHamming: Int, windowMin: Boolean): DataFrame = {
+      maxHamming: Int): DataFrame = {
     val incFp = inc
       .select(col(idCol), col(textCol),
         md5(coalesce(col(textCol), lit(""))).as("fp"))
-    // within-increment exact minimum as a WINDOW over the fp exchange
-    // (r18, guide §2.4): the former separate `groupBy(fp).min` +
-    // join-back subtree re-scanned the increment and re-ran the md5
-    // fingerprint a second time per cache build (the r17 d11 plan's
-    // duplicated increment scans); the window reads its single child
-    // once, and its fp-clustering is exactly what the index join keys
-    // on anyway. GATED on the increment's actual scan bytes (the
-    // pairGuard floor): below it the duplicate scan+md5 runs as a
-    // parallel broadcast-future off the critical path and the window's
-    // serial exchange+sort measurably LOSES (refbench r18: d11 ~+0.5 s
-    // paired at sf0.1), above it a second full md5 pass over the
-    // increment is the cost that matters. Both arms are row-identical
-    // (window min == groupBy min joined back on the key; DedupSpec).
-    val incMin =
-      if (windowMin)
-        incFp.withColumn("inc_min",
-          min(col(idCol)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))))
-      else
-        incFp.join(incFp.groupBy(col("fp"))
-          .agg(min(col(idCol)).as("inc_min")), Seq("fp"))
+    // within-increment exact minimum: groupBy(fp).min joined back on
+    // the key. Its duplicate scan + md5 subtree runs as a parallel
+    // broadcast future off the critical path. A window over the fp
+    // exchange reads the increment once, but its serial exchange + sort
+    // measurably lost at sf0.1 (refbench r18: d11 ~+0.5 s paired) and
+    // was never observed winning at any scale.
+    val incMin = incFp.join(incFp.groupBy(col("fp"))
+      .agg(min(col(idCol)).as("inc_min")), Seq("fp"))
     // exact stage: one fp-keyed join against the index. Cached (the d2
     // precedent — Verify/Bench clear per query, pipelines own
     // clearCache): `tagged` feeds the survivor filter AND the final
@@ -2864,7 +2773,7 @@ object Dedup {
   }
 
   /** Per-cell STAR FOREST over the IVF-cell cosine graph — the
-    * embedding-side twin of [[minhashForestFromSets]] (r13, found at
+    * embedding-side twin of [[minhashForestParts]] (r13, found at
     * the sf100 decade): [[embeddingDupPairs]] emits EVERY within-cell
     * pair over the threshold, which is Omega(family^2) edges for a
     * near-dup family — 96M edges at the sf100 probe, blowing the

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * chars of MD5 (60 bits, always non-negative in a signed 64-bit long) —
   * `CAST('0x' || substr(md5(x),1,15) AS BIGINT)` on the DuckDB side.
   *
-  * Spark's own xxhash64/murmur are preferable when cross-engine parity is
-  * not needed (internal LSH bucketing at scale); both are exposed.
+  * Where cross-engine parity is not needed (internal LSH bucketing at
+  * scale), callers use Spark's codegen'd `xxhash64` directly.
   */
 object Hashing {
 
@@ -28,7 +28,4 @@ object Hashing {
   def hash60(c: Column, seed: Column): Column =
     conv(substring(md5(concat(seed.cast("string"), lit(":"), c)), 1, 15), 16, 10)
       .cast("long")
-
-  /** Fast path (no cross-engine parity): Spark's codegen'd xxhash64. */
-  def fast64(c: Column, seed: Int): Column = xxhash64(lit(seed), c)
 }

@@ -2,11 +2,14 @@ package graft.models
 
 /** The batched-GEMM seam behind [[CatsModel.forwardBatch]] (VERDICT r6
   * #10): the two hot accumulations — the LSTM gate pre-activations and
-  * the conv taps — are expressed as one primitive so an explicit-SIMD
-  * implementation (jdk.incubator.vector, once the incubator module is
-  * permissible in the build) can slot in behind the same API. The
-  * scalar path below is the pinned default; Q17GoldenSpec holds the
-  * model output to the committed goldens at 1e-9 against it.
+  * the conv taps — are expressed as one primitive. [[CatsKernel.Scalar]]
+  * is the only implementation, because an explicit Vector-API kernel
+  * measured 0.86-1.02x of it (SCALE_r09 "Flags and honesty notes": C2's
+  * superword pass already vectorizes the scalar k-loop, and the
+  * bit-stability contract below forbids the fused add(mul)->fma rewrite
+  * where the remaining headroom lives). The trait is the seam
+  * CatsModelSpec injects a counting kernel through. Q17GoldenSpec holds
+  * the model output to the committed goldens at 1e-9 against Scalar.
   */
 trait CatsKernel extends Serializable {
 
@@ -28,41 +31,12 @@ trait CatsKernel extends Serializable {
 
 object CatsKernel {
 
-  /** Runtime-selected kernel. MEASURED NULL RESULT (r9,
-    * SCALE_r09 "Flags and honesty notes", on the model's two hot
-    * shapes): the explicit Vector-API kernel lands at 0.86-1.02x of
-    * Scalar — C2's superword pass already auto-vectorizes the scalar
-    * k-loop (~7.3 GMAC/s, up from the 5.3 the r6 axpy microbench
-    * measured on the narrower tile, SCALE_r06 "q17 batched CNN
-    * forward"), and the bit-stability contract forbids the fused add(mul)->fma
-    * rewrite where the remaining explicit-SIMD headroom lives. So
-    * Scalar stays the default; `-Dgraft.cats.kernel=vector` opts in
-    * to [[CatsVectorKernel]] (bit-identical by contract and by
-    * CatsModelSpec's fuzzed raw-bits pin, so selection never changes
-    * results), falling back cleanly when the incubator module is
-    * absent from the runtime.
-    */
-  lazy val default: CatsKernel =
-    if (!sys.props.get("graft.cats.kernel").contains("vector")) Scalar
-    else
-      try {
-        val k = CatsVectorKernel
-        // force linkage of the incubator classes NOW so an absent
-        // module surfaces here (caught) and not mid-inference
-        val probe = Array(new Array[Double](3))
-        k.gemmAcc(Array(Array(1.0, 2.0)),
-          Array(Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0)), probe)
-        require(probe(0)(0) == 9.0 && probe(0)(2) == 15.0)
-        k
-      } catch { case _: LinkageError | _: Exception => Scalar }
-
-  /** Pinned-default scalar kernel: 4-row batch tiles with the tile
+  /** The scalar kernel: 4-row batch tiles with the tile
     * OUTERMOST, so each weight row streams from L2 once per 4 batch
     * rows while the 4 output rows stay L1-resident across the j loop.
     * Measured at the JVM's superword ceiling (~5.3 GMAC/s L2-resident,
     * SCALE_r06 "q17 batched CNN forward"); the batch win over per-row
-    * is ~1.15x and the order-of-magnitude step needs the vector API —
-    * which is exactly what this seam is for.
+    * is ~1.15x.
     */
   object Scalar extends CatsKernel {
     def gemmAcc(x: Array[Array[Double]], w: Array[Array[Double]],

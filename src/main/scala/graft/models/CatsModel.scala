@@ -27,7 +27,7 @@ import graft.models.Hdf5Reader.Tensor
   * the same archive in CatsModelSpec).
   */
 final class CatsModel(w: Map[String, Tensor],
-    kern: CatsKernel = CatsKernel.default) extends Serializable {
+    kern: CatsKernel = CatsKernel.Scalar) extends Serializable {
   import CatsModel._
 
   private def mat(name: String): Array[Array[Float]] = w(name).matrix
@@ -186,12 +186,11 @@ final class CatsModel(w: Map[String, Tensor],
     * JVM's measured single-stream axpy ceiling for L2-resident weights
     * (an isolated `g(k) += x*w(k)` microbench tops out at 5.3 GMAC/s from L2,
     * 9.6 GMAC/s from L1 — same section), so weight-reuse tiling
-    * buys ~1.15x here, not TF's order-of-magnitude batch win; without
-    * explicit SIMD (jdk.incubator.vector) or float32 (which would
-    * break the 1e-9 golden pins) the scalar/superword ceiling is the
-    * binding constraint. The batch entry point is still the right
-    * plumbing: it amortizes per-call overhead, and a future vectorized
-    * kernel slots in behind the same API.
+    * buys ~1.15x here, not TF's order-of-magnitude batch win; an
+    * explicit Vector-API kernel measured no faster (SCALE_r09, see
+    * [[CatsKernel]]) and float32 would break the 1e-9 golden pins, so
+    * the scalar/superword ceiling is the binding constraint. The batch
+    * entry point still amortizes per-call overhead.
     *
     * Mixed-length inputs are grouped by length and each group runs in
     * lockstep (CATS preprocessing pads everything to one maxLen, so in
@@ -407,7 +406,7 @@ object CatsModel {
       * per-row path re-streams the full weight matrices every row.
       */
     def runBatch(x: Array[Array[Array[Double]]], reverse: Boolean,
-        kern: CatsKernel = CatsKernel.default): Array[Array[Array[Double]]] = {
+        kern: CatsKernel = CatsKernel.Scalar): Array[Array[Array[Double]]] = {
       val bN = x.length
       val n = x(0).length
       val h = Array.ofDim[Double](bN, units)
@@ -477,7 +476,7 @@ object CatsModel {
 
     /** Batched [[sequences]] (lockstep; see [[LstmCell.runBatch]]). */
     def sequencesBatch(x: Array[Array[Array[Double]]],
-        kern: CatsKernel = CatsKernel.default): Array[Array[Array[Double]]] = {
+        kern: CatsKernel = CatsKernel.Scalar): Array[Array[Array[Double]]] = {
       val f = fwd.runBatch(x, reverse = false, kern)
       val b = bwd.runBatch(x, reverse = true, kern)
       val n = x(0).length
@@ -487,7 +486,7 @@ object CatsModel {
 
     /** Batched [[lastState]] (lockstep; see [[LstmCell.runBatch]]). */
     def lastStateBatch(x: Array[Array[Array[Double]]],
-        kern: CatsKernel = CatsKernel.default): Array[Array[Double]] = {
+        kern: CatsKernel = CatsKernel.Scalar): Array[Array[Double]] = {
       val f = fwd.runBatch(x, reverse = false, kern)
       val b = bwd.runBatch(x, reverse = true, kern)
       Array.tabulate(x.length)(r => f(r).last ++ b(r).last)
@@ -504,7 +503,7 @@ object CatsModel {
     * (default: the pinned scalar path).
     */
   def load(kerasPath: String,
-      kern: CatsKernel = CatsKernel.default): CatsModel = {
+      kern: CatsKernel = CatsKernel.Scalar): CatsModel = {
     val zf = new ZipFile(kerasPath)
     try {
       val entry = zf.getEntry("model.weights.h5")

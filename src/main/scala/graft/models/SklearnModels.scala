@@ -57,10 +57,6 @@ object SklearnModels {
       while (c < nClasses) { acc(c) /= trees.length; c += 1 }
       acc
     }
-
-    /** Probability of the given class label. */
-    def probaOf(x: Array[Double], label: Any): Double =
-      proba(x)(classes.indexOf(label))
   }
 
   /** ForestClassifier exposed through the [[Scorer]] interface as

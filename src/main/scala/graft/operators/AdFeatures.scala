@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.alerts.AlertCols.doubles
 import graft.kernels.{LightCurveFeatures, Photometry}
 
 /** Per-band light-curve feature extraction module — reference:
@@ -70,11 +71,9 @@ object AdFeatures {
         csigmapsf: Seq[java.lang.Double], cfid: Seq[java.lang.Integer],
         cdistnr: Seq[java.lang.Double], cmagnr: Seq[java.lang.Double],
         csigmagnr: Seq[java.lang.Double], cisdiffpos: Seq[String]) => {
-      def arr(xs: Seq[java.lang.Double]): Array[Double] =
-        xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
-      extractPerBand(arr(cmagpsf), arr(cjd), arr(csigmapsf),
+      extractPerBand(doubles(cmagpsf), doubles(cjd), doubles(csigmapsf),
         cfid.map(x => if (x == null) -1 else x.intValue()).toArray,
-        arr(cdistnr), arr(cmagnr), arr(csigmagnr),
+        doubles(cdistnr), doubles(cmagnr), doubles(csigmagnr),
         cisdiffpos.map(x => if (x == null) "" else x).toArray)
     })
     df.withColumn("lc_features", kernel(

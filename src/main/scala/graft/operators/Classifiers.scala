@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.WithColumns
 
+import graft.alerts.AlertCols.doubles
 import graft.kernels.{FastTransientKernel, LightCurveFeatures, SigmoidFit}
 import graft.models.{AnomalyModels, RefModels, Scorer, StubModels}
 
@@ -14,10 +15,6 @@ import graft.models.{AnomalyModels, RefModels, Scorer, StubModels}
   * column contracts — follows the reference modules.
   */
 object Classifiers {
-
-  private def arr(xs: Seq[java.lang.Double]): Array[Double] =
-    if (xs == null) Array.empty
-    else xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
 
   /** Per-band (g,r) sigmoid-rise features in flux space; 12 doubles. */
   def sniaFeatures(cjd: Array[Double], cmagpsf: Array[Double],
@@ -52,7 +49,7 @@ object Classifiers {
       scorer: Scorer = RefModels.alSniaScorer.getOrElse(StubModels.forest("rf_snia", 12))): DataFrame = {
     val s = udf((cjd: Seq[java.lang.Double], cm: Seq[java.lang.Double],
         cs: Seq[java.lang.Double], cf: Seq[Int]) =>
-      scorer.score(sniaFeatures(arr(cjd), arr(cm), arr(cs), cf.toArray)))
+      scorer.score(sniaFeatures(doubles(cjd), doubles(cm), doubles(cs), cf.toArray)))
     WithColumns(df, Seq(
       "pIa" -> when(SelectionCuts.sniaGate(col("cmagpsf"), col("candidate.ndethist"),
           col("cdsxmatch")),
@@ -95,7 +92,7 @@ object Classifiers {
     val pc1 = components(0)
     val s = udf((cjd: Seq[java.lang.Double], cm: Seq[java.lang.Double],
         cs: Seq[java.lang.Double], cf: Seq[Int]) => {
-      val jd = arr(cjd); val m = arr(cm); val sig = arr(cs)
+      val jd = doubles(cjd); val m = doubles(cm); val sig = doubles(cs)
       val feats = new Array[Double](8)
       var band = 1
       while (band <= 2) {
@@ -188,8 +185,8 @@ object Classifiers {
     val s = udf((cm: Seq[java.lang.Double], cs: Seq[java.lang.Double],
         cmagnr: Seq[java.lang.Double], csigmagnr: Seq[java.lang.Double],
         cisdiffpos: Seq[String], cf: Seq[Int]) => {
-      val m = arr(cm); val sg = arr(cs)
-      val mnr = arr(cmagnr); val snr = arr(csigmagnr)
+      val m = doubles(cm); val sg = doubles(cs)
+      val mnr = doubles(cmagnr); val snr = doubles(csigmagnr)
       // valid = not an upper limit (magpsf == magpsf in the reference)
       val valid = m.indices.filter(i => !m(i).isNaN)
       if (valid.length < 20) 0.0
@@ -271,12 +268,12 @@ object Classifiers {
       case Some(m) =>
         udf((cjd: Seq[java.lang.Double], cf: Seq[Int], cm: Seq[java.lang.Double],
             cs: Seq[java.lang.Double]) =>
-          graft.models.SnnFeatures.probClass0(m, arr(cjd), cf.toArray,
-            arr(cm), arr(cs)))
+          graft.models.SnnFeatures.probClass0(m, doubles(cjd), cf.toArray,
+            doubles(cm), doubles(cs)))
       case None =>
         udf((cjd: Seq[java.lang.Double], cf: Seq[Int], cm: Seq[java.lang.Double],
             cs: Seq[java.lang.Double]) => {
-          val jd = arr(cjd); val mm = arr(cm); val sg = arr(cs)
+          val jd = doubles(cjd); val mm = doubles(cm); val sg = doubles(cs)
           val sel = mm.indices.filter(i => !mm(i).isNaN && !sg(i).isNaN)
           fallback.score(LightCurveFeatures.extract(
             sel.map(jd).toArray, sel.map(mm).toArray, sel.map(sg).toArray)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.WithColumns
 
+import graft.alerts.AlertCols.doubles
 import graft.kernels.{FastTransientKernel, LightCurveFeatures, OrphanFeatures, SigmoidFit}
 import graft.models.{RefModels, Scorer, StubModels}
 
@@ -84,9 +85,7 @@ object ExtendedClassifiers {
         cfid: Seq[java.lang.Integer], cm: Seq[java.lang.Double],
         cs: Seq[java.lang.Double], distnr: java.lang.Double,
         ra: java.lang.Double, dec: java.lang.Double) => {
-      def arr(xs: Seq[java.lang.Double]) =
-        xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
-      var jd = arr(cjd); var m = arr(cm); var e = arr(cs)
+      var jd = doubles(cjd); var m = doubles(cm); var e = doubles(cs)
       var fids = cfid.map(x => if (x == null) -1 else x.intValue()).toArray
       val fetched = history.lightCurves(Seq(objectId))
       // reference behavior when the Fink API is unreachable: -1
@@ -168,10 +167,7 @@ object ExtendedClassifiers {
       scorer: Scorer = RefModels.orphans.getOrElse(StubModels.forest("orphans", 12))): DataFrame = {
     val s = udf((cmjd: Seq[java.lang.Double], cflux: Seq[java.lang.Double],
         cerr: Seq[java.lang.Double], cband: Seq[String]) => {
-      def arr(xs: Seq[java.lang.Double]) =
-        if (xs == null) Array.empty[Double]
-        else xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
-      val t = arr(cmjd); val flux = arr(cflux); val ferr = arr(cerr)
+      val t = doubles(cmjd); val flux = doubles(cflux); val ferr = doubles(cerr)
       // reference valid gate: total history length >= 5 (processor.py:97)
       if (flux.length < 5) 0.0
       else {
@@ -243,9 +239,7 @@ object ExtendedClassifiers {
     val s = udf((cmjd: Seq[java.lang.Double], cflux: Seq[java.lang.Double],
         cerr: Seq[java.lang.Double], cband: Seq[String],
         ra: java.lang.Double, dec: java.lang.Double) => {
-      def arr(xs: Seq[java.lang.Double]) =
-        xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
-      val t = arr(cmjd); val f = arr(cflux); val e = arr(cerr)
+      val t = doubles(cmjd); val f = doubles(cflux); val e = doubles(cerr)
       val sel = f.indices.filter(i => !f(i).isNaN && !e(i).isNaN)
       // MINIMUM_POINTS gate (kernel.py:22): invalid objects keep -1
       if (sel.length < 7) -1.0

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.WithColumns
 
+import graft.alerts.AlertCols.doubles
 
 /** External Data-Release light-curve source (the reference queries the
   * SNAD ZTF-DR API over HTTP, blazar_extreme_state/utils.py:253-319).
@@ -144,16 +145,14 @@ object ExtremeState {
     val kernel = udf((matched: Boolean, lo: java.lang.Double, hi: java.lang.Double,
         cjd: Seq[java.lang.Double], cstd: Seq[java.lang.Double],
         cra: Seq[java.lang.Double], cdec: Seq[java.lang.Double]) => {
-      def arr(xs: Seq[java.lang.Double]) =
-        xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
       def meanOf(xs: Seq[java.lang.Double]): Double = {
-        val v = arr(xs).filterNot(_.isNaN)
+        val v = doubles(xs).filterNot(_.isNaN)
         if (v.isEmpty) Double.NaN else v.sum / v.length
       }
       features(matched,
         if (lo == null) Double.NaN else lo,
         if (hi == null) Double.NaN else hi,
-        arr(cjd), arr(cstd), meanOf(cra), meanOf(cdec), client)
+        doubles(cjd), doubles(cstd), meanOf(cra), meanOf(cdec), client)
     })
 
     WithColumns(df, Seq("blazar_stats" -> kernel(

@@ -5,6 +5,7 @@ import org.apache.spark.sql.api.java.UDF10
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.WithColumns
 
+import graft.alerts.AlertCols.doubles
 import graft.kernels.FastTransientKernel
 import graft.kernels.FastTransientKernel.FtRate
 
@@ -29,8 +30,6 @@ object FastTransientRate {
 
   def apply(spark: SparkSession, df: DataFrame, n: Int = 10000,
       seed: Long = 0L): DataFrame = {
-    def arr(xs: Series): Array[Double] =
-      xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
     // Java-API udf: no input encoders, so the eight references below are
     // one semantically equal expression that the projection evaluates
     // once per row (a typed Scala udf re-binds its encoders per
@@ -47,7 +46,7 @@ object FastTransientRate {
         if (fid == null || jd == null || jdstarthist == null || magpsf == null ||
             sigmapsf == null) null
         else Row.fromTuple(FastTransientKernel.rate(fid, cfid.map(_.intValue).toArray,
-          arr(cmagpsf), arr(csigmapsf), arr(cdiffmaglim), arr(cjd),
+          doubles(cmagpsf), doubles(csigmapsf), doubles(cdiffmaglim), doubles(cjd),
           jd, jdstarthist, magpsf, sigmapsf, n, seed))
     }, rateType)
 

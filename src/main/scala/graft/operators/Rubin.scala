@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.alerts.AlertCols
+import graft.alerts.AlertCols.doubles
 import graft.kernels.{LightCurveFeatures, RainbowFit}
 import graft.models.{Scorer, StubModels}
 
@@ -101,10 +102,7 @@ object Rubin {
       scorer: Scorer = StubModels.forest("rainbow_ia", 8)): DataFrame = {
     val s = udf((cmjd: Seq[java.lang.Double], cband: Seq[String],
         cflux: Seq[java.lang.Double], cerr: Seq[java.lang.Double]) => {
-      def arr(xs: Seq[java.lang.Double]) =
-        if (xs == null) Array.empty[Double]
-        else xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
-      val mjd = arr(cmjd); val f = arr(cflux); val e = arr(cerr)
+      val mjd = doubles(cmjd); val f = doubles(cflux); val e = doubles(cerr)
       val b = if (cband == null) Array.empty[String]
         else cband.map(x => if (x == null) "" else x).toArray
       val feats = rainbowFeaturesKernel(mjd, b, f, e)
@@ -124,9 +122,7 @@ object Rubin {
   def adFeatures(spark: SparkSession, df: DataFrame): DataFrame = {
     val kernel = udf((cflux: Seq[java.lang.Double], cerr: Seq[java.lang.Double],
         cmjd: Seq[java.lang.Double], cband: Seq[String]) => {
-      def arr(xs: Seq[java.lang.Double]) =
-        xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
-      val f = arr(cflux); val e = arr(cerr); val t = arr(cmjd)
+      val f = doubles(cflux); val e = doubles(cerr); val t = doubles(cmjd)
       Bands.flatMap { b =>
         val sel = cband.indices.filter(i => cband(i) == b &&
           !f(i).isNaN && !e(i).isNaN)
@@ -160,21 +156,17 @@ object Rubin {
         val filters = Seq("u", "g", "r", "i", "z", "Y")
         udf((cflux: Seq[java.lang.Double], cerr: Seq[java.lang.Double],
             cmjd: Seq[java.lang.Double], cband: Seq[String]) => {
-          def arr(xs: Seq[java.lang.Double]) =
-            xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
           val b = if (cband == null) Array.empty[String]
             else cband.map(x => if (x == null) "" else x).toArray
-          graft.models.SnnFeatures.probClass0Flux(m, arr(cmjd), b,
-            arr(cflux).map(_ * fluxcal), arr(cerr).map(_ * fluxcal), filters)
+          graft.models.SnnFeatures.probClass0Flux(m, doubles(cmjd), b,
+            doubles(cflux).map(_ * fluxcal), doubles(cerr).map(_ * fluxcal), filters)
         })
       case None =>
         udf((cflux: Seq[java.lang.Double], cerr: Seq[java.lang.Double],
             cmjd: Seq[java.lang.Double], cband: Seq[String]) => {
-          def arr(xs: Seq[java.lang.Double]) =
-            xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
-          val f = arr(cflux).map(_ * fluxcal)
-          val e = arr(cerr).map(_ * fluxcal)
-          val t = arr(cmjd)
+          val f = doubles(cflux).map(_ * fluxcal)
+          val e = doubles(cerr).map(_ * fluxcal)
+          val t = doubles(cmjd)
           val sel = f.indices.filter(i => !f(i).isNaN && !e(i).isNaN)
           val feats = LightCurveFeatures.extract(
             sel.map(t).toArray, sel.map(f).toArray, sel.map(e).toArray)
@@ -260,24 +252,20 @@ object Rubin {
       org.apache.spark.sql.Encoders.row(outSchema)
     val scored = staged.mapPartitions { it =>
       it.grouped(batchRows).flatMap { rows =>
-        def arr(r: Row, i: Int): Array[Double] = {
-          val xs = if (r.isNullAt(i)) null else r.getSeq[java.lang.Double](i)
-          if (xs == null) Array.empty[Double]
-          else xs.map(x => if (x == null) Double.NaN else x.doubleValue()).toArray
-        }
         // rows passing the reference's >=2-point gate go to the model
         // as ONE stacked batch; the rest keep the all-zero vector
         val tensors = Array.newBuilder[Array[Array[Float]]]
         val slot = new Array[Int](rows.length)
         var nScore = 0
         rows.zipWithIndex.foreach { case (r, i) =>
-          val t = arr(r, 2)
+          val t = doubles(r.getSeq[java.lang.Double](2))
           if (t.length <= 1) slot(i) = -1
           else {
             val bs = if (r.isNullAt(3)) null else r.getSeq[String](3)
             val b = if (bs == null) Array.fill(t.length)("")
               else bs.map(x => if (x == null) "" else x).toArray
-            tensors += catsInputTensor(t, arr(r, 0), arr(r, 1), b)
+            tensors += catsInputTensor(t, doubles(r.getSeq[java.lang.Double](0)),
+              doubles(r.getSeq[java.lang.Double](1)), b)
             slot(i) = nScore
             nScore += 1
           }

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ScanBytes
 import graft.Tables.t
 import graft.dedup.Dedup
 import graft.multimodal.Multimodal
@@ -30,7 +31,7 @@ object PipelineQueries extends QueryPack {
   // them (p5 at sf10: 19-25 s bare vs 36 s spread — the chain pays a
   // full-width text exchange its internal spread placement avoids).
   private def sdocs(s: SparkSession, dir: String) =
-    TextOps.spread(t(s, dir, "documents"))
+    ScanBytes.spread(t(s, dir, "documents"), ScanBytes.KernelFloor)
   private def emb(s: SparkSession, dir: String) = t(s, dir, "embeddings")
 
   // ---- dedup family ----
@@ -2117,7 +2118,7 @@ object PipelineQueries extends QueryPack {
 
   private def cellAssignCtes(src: String, fixedK: String = null,
       seedSrc: String = null): String = {
-    val div = graft.sim.Similarity.cellDivisor
+    val div = graft.sim.Similarity.CellDivisor
     val gate = graft.sim.Similarity.TwoLevelGate
     // the SEED frame decides the cell count and the centroids (r16:
     // d23 passes the full corpus here while assigning the sample —

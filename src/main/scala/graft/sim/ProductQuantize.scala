@@ -106,7 +106,7 @@ object ProductQuantize {
         // non-null, length nsub): an inner generate's inferred
         // size-filter would re-evaluate the whole encode per row in
         // the scan's data filter (see trainCodebooks)
-        val codeTab = graft.sim.Similarity.parallelized(codes, codes)
+        val codeTab = graft.ScanBytes.spread(codes, graft.ScanBytes.VectorFloor)
           .select(col("id"),
             posexplode_outer(PqEncode(col("q"), bc)).as(Seq("sub", "cell")))
           .filter(col("sub").isNotNull)
@@ -125,11 +125,12 @@ object ProductQuantize {
     val seed = subcodes0.filter(col("id") < kcent)
       .select(col("sub"), col("id").as("cell"), col("sv").as("cv"))
     // every iteration's distance pass runs above this exchange
-    // (graft.sim.Similarity.parallelized: a 1-2 split scan would
+    // (graft.ScanBytes.spread: a 1-2 split scan would
     // serialize the per-row assignment math on as many cores; the
     // size gate reads `codes` — subcodes' Generate has no
     // scan-derived estimate)
-    val subcodes = graft.sim.Similarity.parallelized(subcodes0, codes)
+    val subcodes =
+      graft.ScanBytes.spread(subcodes0, graft.ScanBytes.VectorFloor, codes)
     require(!seed.isEmpty, s"ProductQuantize.train: seed codebook is " +
       s"empty — no $idCol < kcent=$kcent exists (ids must start at 0); " +
       "normalize ids or raise kcent")
@@ -208,7 +209,8 @@ object ProductQuantize {
         idOf(r.get(1)) -> vecOf(r.getSeq[Any](2))))
     }
     var cb = new PqCodebooks(seed)
-    val subcodes = graft.sim.Similarity.parallelized(subcodes0, codes0)
+    val subcodes =
+      graft.ScanBytes.spread(subcodes0, graft.ScanBytes.VectorFloor, codes0)
     val sc = emb.sparkSession.sparkContext
     for (_ <- 0 until iters) {
       val bc = sc.broadcast(cb)
@@ -295,7 +297,7 @@ object ProductQuantize {
           .withColumn("d", Vec.sqDist(col("qv"), col("cv")))
           .select(col("sub"), col("cell"), col("d")).collect()
         val codes = Quantize.int8Codes(emb, idCol, vecCol)
-        val scored = graft.sim.Similarity.parallelized(codes, codes)
+        val scored = graft.ScanBytes.spread(codes, graft.ScanBytes.VectorFloor)
           .select(col("id"), PqEncode(col("q"), bcCb).as("codes"))
         if (dtRows.isEmpty) // absent query id: the former inner join
           return scored.select(col("id"), lit(0.0).as("adist")) // emitted nothing

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Column}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ScanBytes
 import graft.dedup.{Dedup, SweepCheckpoint, Vec}
 
 /** Approximate-nearest-neighbor search over an embedding column.
@@ -41,7 +42,7 @@ object Similarity {
     val e0 = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .filter(nonZero(col("v")))
     val q = e0.filter(col("id") === queryId).select(col("v").as("qv"))
-    parallelized(e0).join(broadcast(q))
+    ScanBytes.spread(e0, ScanBytes.VectorFloor).join(broadcast(q))
       .filter(col("id") =!= queryId)
       .withColumn("cos", Vec.cosine(col("v"), col("qv")))
       .select(col("id"), col("cos"))
@@ -49,58 +50,14 @@ object Similarity {
       .limit(k)
   }
 
-  /** Spread a narrow scan across the session's cores before a
-    * compute-heavy broadcast join: a single small parquet file arrives
-    * as 1-2 splits, and every per-row distance evaluation above it
-    * would serialize on as many cores (the `Dedup.parallelized`
-    * treatment — measured 23.6 s -> ~3 s for the sf10 cell-assignment
-    * pass). No-op at real scale where scans carry enough splits, AND
-    * below a 16 MB floor: on a corpus that small the serial pass is
-    * cheaper than the exchange plus the per-stage task overhead the
-    * extra partitions add to every downstream stage (measured: an
-    * ungated repartition cost the Lloyd-loop operators +0.6..1.7 s
-    * per query at the oracle scales while the corpus fit in one task
-    * anyway). The floor is denominated in ACTUAL scan bytes
-    * ([[graft.ScanBytes]], VERDICT r13 #2): the embeddings table is
-    * ~8 MB on disk at the 20k-vector scale where the exchange is a
-    * wash and ~80 MB at the 200k-vector scale where it pays 8x, so
-    * 16 MB keeps the measured behavior with margin on both sides.
-    * `gate` overrides the frame whose size decides — pass the
-    * pre-explode base when `df` contains a Generate, whose size is
-    * not scan-derived.
+  /** Per-cell occupancy target for [[autoCells]]. A constant, not a
+    * session knob: a knob that changed cell counts would also change
+    * the mirrored oracle CTEs (`PipelineQueries.cellAssignCtes` reads
+    * this value), so the parity harness could not catch the drift
+    * (ADVICE r13). s11 exercises the two-level route unforced and
+    * SimilaritySpec forces branches through explicit `ncells`.
     */
-  private[sim] def parallelized(df: DataFrame,
-      gate: DataFrame = null): DataFrame = {
-    if (df.isStreaming) return df
-    val g = if (gate == null) df else gate
-    val bytes = graft.ScanBytes.of(g)
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (bytes >= (1L << 24) && df.rdd.getNumPartitions < target)
-      df.repartition(target)
-    else df
-  }
-
-  /** Per-cell occupancy target for [[autoCells]]. Fixed at 4096 in
-    * production — a session knob that silently changed cell counts
-    * would also change the mirrored oracle CTEs, so the parity harness
-    * could NOT catch the drift (ADVICE r13). The former
-    * `GRAFT_CELL_DIVISOR` env override is retired (VERDICT r14 #5):
-    * s11 exercises the two-level route unforced and SimilaritySpec
-    * forces branches through explicit `ncells`, so the only remaining
-    * escape hatch is the `graft.test.cellDivisor` SYSTEM property — a
-    * test-JVM flag no production launcher sets — and a non-default
-    * value is still loudly logged.
-    */
-  private[graft] val cellDivisor: Long = {
-    val v = sys.props.get("graft.test.cellDivisor").map(_.toLong)
-    v.filter(_ != 4096L).foreach { d =>
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
-        s"graft.test.cellDivisor=$d overrides the 4096 IVF occupancy " +
-          "target — TEST-ONLY flag; cell counts (and the mirrored " +
-          "oracle CTEs) are non-standard for this JVM")
-    }
-    v.getOrElse(4096L)
-  }
+  private[graft] val CellDivisor: Long = 4096L
 
   /** Driver-side id-statistics cache for the IVF family, keyed by the
     * CANONICALIZED logical plan of the id projection: one
@@ -184,7 +141,7 @@ object Similarity {
     * on the pinned 8-cell structure the DuckDB oracles encode.
     */
   def autoCells(emb: DataFrame, idCol: String): Int =
-    math.max(8, (idStats(emb, idCol)._1 / cellDivisor).toInt)
+    math.max(8, (idStats(emb, idCol)._1 / CellDivisor).toInt)
 
   /** Cell-count gate above which [[assignCells]] routes through the
     * two-level coarse quantizer. At or below it the single-level
@@ -259,7 +216,7 @@ object Similarity {
     val idx = org.apache.spark.sql.graft.CellIndex.build(
       cent, ncells > TwoLevelGate)
     val bc = e0.sparkSession.sparkContext.broadcast(idx)
-    parallelized(e0).select(col("id"),
+    ScanBytes.spread(e0, ScanBytes.VectorFloor).select(col("id"),
       org.apache.spark.sql.graft.NearestCell(col("v"), bc).as("cell"),
       col("v"))
   }
@@ -384,7 +341,7 @@ object Similarity {
           .select((row_number().over(w) - 1).cast("long").as("cell"),
             col("v").as("cv"))
       }
-    val e = parallelized(e0)
+    val e = ScanBytes.spread(e0, ScanBytes.VectorFloor)
     if (ncells <= TwoLevelGate) {
       e.join(broadcast(cent))
         .withColumn("d", Vec.sqDist(col("v"), col("cv")))
@@ -519,7 +476,7 @@ object Similarity {
       }.toArray
     })
     // every iteration's distance pass runs above this exchange
-    val codes = parallelized(codes0)
+    val codes = ScanBytes.spread(codes0, ScanBytes.VectorFloor)
     val sc = emb.sparkSession.sparkContext
     for (_ <- 0 until iters) {
       val bc = sc.broadcast(cb)
@@ -571,7 +528,7 @@ object Similarity {
     val seed = codes0.filter(col("id") < ncells)
       .select(col("id").as("cell"), col("q").as("cv"))
     // every iteration's distance pass runs above this exchange
-    val codes = parallelized(codes0)
+    val codes = ScanBytes.spread(codes0, ScanBytes.VectorFloor)
     require(!seed.isEmpty, s"kmeansCells: seed centroid table is empty — " +
       s"no $idCol < ncells=$ncells exists (ids must start at 0 per the " +
       "assignCells convention); normalize ids or raise ncells")
@@ -652,7 +609,12 @@ object Similarity {
   def srpTopK(emb: DataFrame, idCol: String, vecCol: String,
       queryId: Long, k: Int, nPlanes: Int = 8, maxHamming: Int = 1): DataFrame = {
     val e0 = emb.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val bucketed = srpBucketedAs(widened(e0), "id", "v", e0, "v", nPlanes)
+    // full width with no byte floor (OPTIMIZATION_r17 §5): at a 13 MB
+    // sf1 corpus, under VectorFloor, the bucket + candidate join +
+    // cosine pipeline serialized on one scan split and s6 ran 1.6x
+    // slower than the join arm
+    val bucketed = srpBucketedAs(ScanBytes.spread(e0, 0L), "id", "v", e0, "v",
+        nPlanes)
       .filter(nonZero(col("v")))
     val q = bucketed.filter(col("id") === queryId)
       .select(col("v").as("qv"), col("bucket").as("qb"))
@@ -682,25 +644,6 @@ object Similarity {
     * collapsed duplicate ids to one arbitrary row rather than doing
     * anything well-defined with them).
     */
-  /** Pin the frame to session width BEFORE a map-only stage whose
-    * downstream is compute-heavy (the SCALE_r17 §7 / d6 lesson,
-    * re-learned here on s6: removing the former bucketing aggregate's
-    * exchange also removed the width it accidentally provided — at a
-    * 13 MB sf1 corpus, under [[parallelized]]'s 16 MB byte floor, the
-    * whole bucket + candidate join + cosine pipeline serialized on ONE
-    * scan split and s6 ran 1.6x SLOWER than the join arm, probed
-    * single-session, OPTIMIZATION_r17 §5). The former aggregate exchanged
-    * the corpus unconditionally, so an explicit-width repartition can
-    * never cost more than the old shape — and explicit widths are
-    * exempt from AQE's byte-based coalescing, which cannot see
-    * compute density.
-    */
-  private def widened(df: DataFrame): DataFrame = {
-    if (df.isStreaming) return df
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < target) df.repartition(target) else df
-  }
-
   private def srpBucketed(df: DataFrame, idc: String, vc: String,
       nPlanes: Int): DataFrame =
     srpBucketedAs(df, idc, vc, df, vc, nPlanes)
@@ -854,7 +797,9 @@ object Similarity {
     // per-side groupBy(id) aggregate exchanged a copy of every vector).
     // The hyperplane table derives from the CORPUS dimensionality for
     // both sides, as before.
-    val bucketed = srpBucketedAs(widened(e), "id", "v", e, "v", nPlanes)
+    // full width, no byte floor (see srpTopK)
+    val bucketed = srpBucketedAs(ScanBytes.spread(e, 0L), "id", "v", e, "v",
+        nPlanes)
       .filter(nonZero(col("v")))
     val qin = queries.select(col(qidCol).as("qid"),
       asDouble(col(qvecCol)).as("qv"))

@@ -38,8 +38,9 @@ object BigramLm {
   private def positions(docs: DataFrame, idCol: String,
       textCol: String): DataFrame =
     // spread an under-split scan before the tokenize + position
-    // explode (TextOps.spread; no-op on well-split corpora)
-    TextOps.spread(docs.select(col(idCol), col(textCol)))
+    // explode (no-op on well-split corpora)
+    graft.ScanBytes.spread(docs.select(col(idCol), col(textCol)),
+        graft.ScanBytes.KernelFloor)
       .select(col(idCol).as("doc_id"),
         // pinned native tokenizer (r18): no regex per row, and the
         // position explode's inferred filter can no longer re-tokenize

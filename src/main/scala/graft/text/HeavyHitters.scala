@@ -64,7 +64,7 @@ object HeavyHitters {
     // null-total tokenization (the t17 convention): null text becomes
     // one empty token on BOTH engines (Spark's explode would silently
     // drop a null array where DuckDB's unnest keeps ['']). The scan is
-    // spread first (TextOps.spread): the tokenize + explode + partial
+    // spread first (ScanBytes.spread): the tokenize + explode + partial
     // CMS/count aggregation all run map-side, and an under-split file
     // would pin them to one task. r13 carried a halved floor here
     // because the optimizer-estimate denomination saw a TEXT-ONLY
@@ -72,7 +72,8 @@ object HeavyHitters {
     // sf1-slower-than-sf10 inversion); the scan-bytes denomination
     // (VERDICT r13 #2) is projection-independent, so the default
     // floor applies unmodified.
-    val toks = TextOps.spread(docs.select(col(textCol)))
+    val toks = graft.ScanBytes.spread(docs.select(col(textCol)),
+        graft.ScanBytes.KernelFloor)
       .select(
         // pinned native tokenizer (r18): single-pass byte split, no
         // inferred-filter re-tokenize in the scan stage

@@ -41,12 +41,12 @@ object Repetition {
     *   - `dup3_frac`: characters covered by every word 3-gram occurring
     *     more than once, over the document's char length.
     */
-  def signals(docs: DataFrame, idCol: String, textCol: String,
-      spreadFloor: Long = TextOps.DefaultSpreadFloor): DataFrame = {
+  def signals(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
     // spread an under-split scan before the per-doc tokenize + gram
-    // explode (TextOps.spread: a single-row-group file otherwise pins
-    // this whole map side to one task)
-    val base = TextOps.spread(docs.select(col(idCol), col(textCol)), spreadFloor)
+    // explode (a single-row-group file otherwise pins this whole map
+    // side to one task)
+    val base = graft.ScanBytes.spread(docs.select(col(idCol), col(textCol)),
+        graft.ScanBytes.KernelFloor)
       .select(
         col(idCol).as("doc_id"),
         length(col(textCol)).cast("long").as("n_chars_t"),

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** ONE tokenization materialization feeding the whole text family —
-  * the term-table counterpart of [[graft.dedup.Dedup.shingleSets]]
+  * the term-table counterpart of [[graft.dedup.Dedup.signedSets]]
   * (which plays the same role for the d2/d3 near-dup family): a corpus
   * pipeline that computes TF-IDF vocabulary, per-source token stats
   * and benchmark decontamination in one run should lowercase and split

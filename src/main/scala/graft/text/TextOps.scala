@@ -13,45 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object TextOps {
 
-  /** Default corpus-size floor for [[spread]]: below it the exchange
-    * costs more than single-task execution saves (see spread's
-    * derivation note). Operators whose map kernel is unusually cheap
-    * or expensive may pass their own measured floor.
-    */
-  val DefaultSpreadFloor: Long = 1L << 21
-
-  /** Spread a narrow document scan across the session's cores before
-    * map-heavy per-document kernels (tokenize/regex/fingerprint) — the
-    * `Dedup.parallelized` treatment for the text family. A
-    * single-file corpus written by the common pandas/pyarrow path
-    * arrives as ONE parquet row group, and Spark's byte-range file
-    * splits assign a row group to exactly one task — so every
-    * downstream per-doc kernel serializes on one core no matter how
-    * wide the session is (SCALE_r12's t-family "constant-factor band"
-    * was exactly this: linear compute pinned to a single task, ~10x
-    * wall per data decade at fixed cores). No-op, and no shuffle,
-    * when the scan already carries enough partitions — the
-    * real-corpus case — or below `floorBytes` (default 2 MB: one-shot
-    * map kernels win from the exchange well below the floors the
-    * iterative dedup/Lloyd operators measured, but a tiny corpus
-    * still fits one task cheaper than an exchange). The floor is
-    * denominated in ACTUAL scan bytes ([[graft.ScanBytes]], VERDICT
-    * r13 #2 — the optimizer's 20-byte string width undercut real text
-    * ~2.5x and forced per-site tuned constants): the exchange
-    * measurably pays at the 50k-doc scale (6.0 MB on disk) and hurts
-    * at the oracle scales (<= 0.6 MB), so 2 MB is the geometric
-    * midpoint with ~3x margin to both measured sides.
-    */
-  def spread(df: org.apache.spark.sql.DataFrame,
-      floorBytes: Long = DefaultSpreadFloor): org.apache.spark.sql.DataFrame = {
-    if (df.isStreaming) return df // micro-batches size themselves
-    val bytes = graft.ScanBytes.of(df)
-    val target = df.sparkSession.sparkContext.defaultParallelism
-    if (bytes >= floorBytes && df.rdd.getNumPartitions < target)
-      df.repartition(target)
-    else df
-  }
-
   /** Whitespace tokenizer (single-space; the corpus normal form).
     * Since r18 the native single-pass kernel ([[org.apache.spark.sql
     * .graft.TokenizeSpace]], bit-identical to `split(lower(text), " ")`

@@ -24,12 +24,12 @@ object TfIdf {
   /** (doc_id, top_term, top_tfidf): the max-tf-idf term per document,
     * ties to the lexicographically smallest term.
     */
-  def topTerm(docs: DataFrame, idCol: String, textCol: String,
-      spreadFloor: Long = TextOps.DefaultSpreadFloor): DataFrame =
+  def topTerm(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     topTermFromTokens(
       // spread an under-split scan before the tokenize + explode
-      // (TextOps.spread; no-op on well-split corpora)
-      TextOps.spread(docs.select(col(idCol), col(textCol)), spreadFloor)
+      // (no-op on well-split corpora)
+      graft.ScanBytes.spread(docs.select(col(idCol), col(textCol)),
+          graft.ScanBytes.KernelFloor)
         .select(col(idCol).as("doc_id"),
           // pinned native tokenizer (r18, VERDICT r17 #4): kills the
           // inferred-filter double-tokenize in the scan stage without

@@ -32,8 +32,9 @@ object UnigramLm {
   def surprisal(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     surprisalFromTokens(
       // spread an under-split scan before the tokenize + explode
-      // (TextOps.spread; no-op on well-split corpora)
-      TextOps.spread(docs.select(col(idCol), col(textCol)))
+      // (no-op on well-split corpora)
+      graft.ScanBytes.spread(docs.select(col(idCol), col(textCol)),
+          graft.ScanBytes.KernelFloor)
         .select(col(idCol).as("doc_id"),
           // pinned native tokenizer (r18) — see the r17 note below: the
           // outer-generate cure was worse; this one keeps the Generate

@@ -164,13 +164,9 @@ object Winnow {
     val fpk = udf((t: String) => fingerprints(if (t == null) "" else t, k, w))
       .asNondeterministic() // keeps the kernel above the exchange (the
     // signedSets convention); fingerprints() is pure
-    val spark = df.sparkSession
-    val target = spark.sparkContext.defaultParallelism
-    val base = df.select(col(idCol).as("id"), col(textCol).as("__t"))
-    val wide =
-      if (!df.isStreaming && base.rdd.getNumPartitions < target)
-        base.repartition(target)
-      else base
+    val target = df.sparkSession.sparkContext.defaultParallelism
+    val wide = graft.ScanBytes.spread(
+      df.select(col(idCol).as("id"), col(textCol).as("__t")), 0L)
     // fingerprints() returns a distinct set, so (id, fp) is unique.
     // df-prune as a WINDOW count over one fp-keyed exchange, not the
     // r17 groupBy + join-back (r18, guide §2.4): the nondeterministic

@@ -117,33 +117,4 @@ class CatsModelSpec extends AnyFunSuite {
       assert(got(i)(c) == viaPerRow(i)(c), s"row $i class $c vs per-row")
     }
   }
-
-  test("vector kernel loads under test and is BIT-identical to scalar on fuzzed shapes") {
-    // Scalar is the measured default (the SCALE_r09 vector-kernel null
-    // result — see CatsKernel.default); the vector kernel must still
-    // LOAD here (build.sbt adds the incubator module to forked runs) so
-    // the opt-in path stays exercised, and must be raw-bits identical
-    assert(graft.models.CatsKernel.default eq graft.models.CatsKernel.Scalar,
-      "default drifted from the measured-scalar decision")
-    val lcg = new Lcg(7L)
-    // shapes straddling the lane width (SPECIES_PREFERRED is 2-8
-    // doubles): remainders, sub-lane rows, odd batch counts
-    for (trial <- 0 until 20) {
-      val bN = 1 + (trial % 5)
-      val nJ = 1 + ((trial * 7) % 9)
-      val nK = 1 + ((trial * 13) % 19)
-      def mat(rows: Int, cols: Int) =
-        Array.fill(rows)(Array.fill(cols)(lcg.next() * 3.5))
-      val x = mat(bN, nJ)
-      val w = mat(nJ, nK)
-      val o1 = mat(bN, nK)
-      val o2 = o1.map(_.clone())
-      graft.models.CatsKernel.Scalar.gemmAcc(x, w, o1)
-      graft.models.CatsVectorKernel.gemmAcc(x, w, o2)
-      for (b <- 0 until bN; k <- 0 until nK)
-        assert(java.lang.Double.doubleToRawLongBits(o1(b)(k)) ==
-          java.lang.Double.doubleToRawLongBits(o2(b)(k)),
-          s"trial $trial out($b)($k): scalar ${o1(b)(k)} vs vector ${o2(b)(k)}")
-    }
-  }
 }

@@ -919,16 +919,6 @@ class DedupSpec extends SparkSpec {
     assert(out(23L) === (("new", -1L)))
     // every increment id classified exactly once
     assert(out.keySet === Set(11L, 13L, 15L, 17L, 19L, 21L, 23L))
-    // the two within-increment-minimum arms (scan-bytes-gated window vs
-    // groupBy+join-back, r18) are row-identical on the same frame
-    val byArm = Seq(true, false).map { wm =>
-      Dedup.incrementalDedupImpl(inc, "doc_id", "text",
-          Dedup.exactIndex(base, "doc_id", "text"),
-          Dedup.bandIndex(base, "doc_id", "text", 4), maxHamming = 4,
-          windowMin = wm)
-        .collect().map(_.toSeq).toSet
-    }
-    assert(byArm(0) === byArm(1), "windowMin arms diverged")
   }
 
   test("containmentPairs: asymmetric, planted containment found, threshold exact") {

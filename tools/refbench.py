@@ -35,8 +35,7 @@ def run_arm(jar, sfdir, queries, mem="8g"):
     cmd = ["java"]
     for p in ADD_OPENS:
         cmd += ["--add-opens", f"{p}=ALL-UNNAMED"]
-    cmd += ["--add-modules", "jdk.incubator.vector",
-            "-Dspark.ui.enabled=false",
+    cmd += ["-Dspark.ui.enabled=false",
             "-Dspark.sql.session.timeZone=UTC",
             f"-Xmx{mem}",
             "-cp", f"{jar}:/opt/spark/jars/*", "graft.Bench"]
